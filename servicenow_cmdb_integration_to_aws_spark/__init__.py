@@ -18,9 +18,19 @@ Every operator registers a ``(spark, sf_dir) -> DataFrame`` callable in
 
 from __future__ import annotations
 
+import importlib
+import json
+from collections.abc import Iterable
+from pathlib import Path
+
 from . import registry
 from .api import CmdbEngine
 from .registry import ORACLE, QUERIES
+
+#: the order ``queries()`` lists ids in, generated by
+#: ``tools/driver_order.py`` from the CORRECTNESS records and git — never
+#: edited by hand
+DRIVER_ORDER_JSON = Path(__file__).with_name("driver_order.json")
 
 _LOADED = False
 
@@ -29,341 +39,59 @@ def load_all():
     """Import every operator module (idempotent); returns the registry."""
     global _LOADED
     if not _LOADED:
-        # Registration order IS the driver's correctness-check order (it
-        # walks queries() in dict-insertion order with a time budget).
-        # Round 1's driver pass ran out of budget at id 50, leaving the
-        # E/H/I/J/K/M/P/T categories with no hard-signal row — so those
-        # register FIRST this round; the categories the driver already
-        # verified green (aggregates/filters/scans/setops/sorts/joins)
-        # come last.
         for mod in (
-            "servicenow_cmdb_integration_to_aws_spark.operators.golden2",
-            "servicenow_cmdb_integration_to_aws_spark.llm.retrieval",
-            "servicenow_cmdb_integration_to_aws_spark.operators.graph",
-            "servicenow_cmdb_integration_to_aws_spark.operators.extended",
-            "servicenow_cmdb_integration_to_aws_spark.operators.transform_map",
-            "servicenow_cmdb_integration_to_aws_spark.operators.evolution",
-            "servicenow_cmdb_integration_to_aws_spark.operators.windows",
-            "servicenow_cmdb_integration_to_aws_spark.functions.scalar",
-            "servicenow_cmdb_integration_to_aws_spark.llm.dedup",
-            "servicenow_cmdb_integration_to_aws_spark.llm.vectors",
-            "servicenow_cmdb_integration_to_aws_spark.llm.text",
-            "servicenow_cmdb_integration_to_aws_spark.llm.pipeline",
-            "servicenow_cmdb_integration_to_aws_spark.operators.analytics",
-            "servicenow_cmdb_integration_to_aws_spark.llm.multimodal",
-            "servicenow_cmdb_integration_to_aws_spark.streaming.batch_equiv",
-            "servicenow_cmdb_integration_to_aws_spark.streaming.stream_ops",
-            "servicenow_cmdb_integration_to_aws_spark.streaming.compaction",
-            "servicenow_cmdb_integration_to_aws_spark.operators.udf_surface",
-            "servicenow_cmdb_integration_to_aws_spark.plans.encoded_query",
-            "servicenow_cmdb_integration_to_aws_spark.operators.golden",
-            "servicenow_cmdb_integration_to_aws_spark.sources.rest_source",
-            "servicenow_cmdb_integration_to_aws_spark.sources.python_source",
-            "servicenow_cmdb_integration_to_aws_spark.operators.sinks",
-            "servicenow_cmdb_integration_to_aws_spark.operators.scans",
-            "servicenow_cmdb_integration_to_aws_spark.operators.aggregates",
-            "servicenow_cmdb_integration_to_aws_spark.operators.filters",
-            "servicenow_cmdb_integration_to_aws_spark.operators.setops",
-            "servicenow_cmdb_integration_to_aws_spark.operators.sorts",
-            "servicenow_cmdb_integration_to_aws_spark.operators.joins",
+            "operators.golden2",
+            "llm.retrieval",
+            "operators.graph",
+            "operators.extended",
+            "operators.transform_map",
+            "operators.evolution",
+            "operators.windows",
+            "functions.scalar",
+            "llm.dedup",
+            "llm.vectors",
+            "llm.text",
+            "llm.pipeline",
+            "operators.analytics",
+            "llm.multimodal",
+            "streaming.batch_equiv",
+            "streaming.stream_ops",
+            "streaming.compaction",
+            "operators.udf_surface",
+            "plans.encoded_query",
+            "operators.golden",
+            "sources.rest_source",
+            "sources.python_source",
+            "operators.sinks",
+            "operators.scans",
+            "operators.aggregates",
+            "operators.filters",
+            "operators.setops",
+            "operators.sorts",
+            "operators.joins",
         ):
-            import importlib
-
-            try:
-                importlib.import_module(mod)
-            except ModuleNotFoundError:
-                pass  # module not built yet (build proceeds in phases)
-        _reorder_for_driver_budget()
+            importlib.import_module(f"{__name__}.{mod}")
+        order = driver_order(registry.QUERIES, DRIVER_ORDER_JSON)
+        for d in (registry.QUERIES, registry.ORACLE):
+            snap = {k: d[k] for k in order if k in d}
+            d.clear()
+            d.update(snap)
         _LOADED = True
     return registry
 
 
-#: ids with a green hard-signal row in ANY of CORRECTNESS_r01..r05.json
-#: (union of all five driver passes; r3 ≡ r4 key sets). The driver
-#: re-checks in registration order under a time budget, so these go
-#: LAST and the 62 never-checked ids go first — r3/r4 froze on the same
-#: 50-id prefix, which is exactly how the i11 streaming-ts bug stayed
-#: driver-invisible for two rounds.
-_DRIVER_GREEN = frozenset(
-    {
-        # r1 pass
-        "d1_agg_global", "d2_agg_group", "d3_agg_having",
-        "d4_count_distinct", "d6_rollup", "d7_cube", "d8_grouping_sets",
-        "d11_stats", "d12_agg_distinct_input", "d14_salted_agg",
-        "b1_project", "b2_computed", "b3_eq_filter", "b4_cmp_filter",
-        "b5_like", "b6_in", "b7_null", "b8_between", "b9_sameas",
-        "b10_boolcomp", "b11_reldate", "b12_regex",
-        "a1_scan_parquet", "a2_scan_schema", "a3_ingest_jsonl",
-        "a4_rest_page_sim", "a9_bucketed_join",
-        "g1_union_all", "g2_union_distinct", "g3_intersect", "g4_except",
-        "f1_sort", "f2_limit", "f3_offset", "f4_topk_group",
-        "c1_join_bcast", "c2_join_shuffle", "c3_join_left", "c4_join_full",
-        "c5_join_semi", "c6_join_anti", "c7_join_theta", "c8_join_asof",
-        "c9_rel_2hop", "c10_join_cross", "c11_rel_closure", "e1_rownum",
-        # r2–r4 passes (identical key set r3/r4)
-        "d5_approx_distinct", "d9_collect", "d10_percentile",
-        "d13_pivot", "d15_unpivot", "d16_conditional_aggs",
-        "a10_schema_evolve", "a11_class_union", "a13_transform_map",
-        "b13_exists", "b14_null_safe_eq", "c13_reconcile",
-        "e2_rank", "e3_lag_lead", "e4_running", "e5_moving",
-        "e6_range_frame", "e7_firstlast", "e8_dedup_latest",
-        "e9_ntile_dist", "e10_gap_islands",
-        "f5_stratified_sample", "g5_intersect_all", "g6_except_all",
-        "h1_string", "h2_regex_fn", "h3_date", "h4_math", "h5_cond",
-        "h6_cast", "h7_array", "h8_higher_order", "h9_map", "h10_json",
-        "h11_hash", "h12_wordcount", "h13_bitops", "h14_struct_ops",
-        "j1_exact_dedup", "j2b_simhash", "j3_cosine_knn", "j3b_ivf_knn",
-        "j4_knn_join", "j5_centroids", "j6_l2norm", "j7_tokenize_tf",
-        "j15_dup_clusters", "j18_token_count", "k6_arrow_map",
-        "t4_golden_q18",
-        # r5 pass (48 green; the round's 2 hash-FAILs i7/e12 stay out —
-        # their oracles are fixed this round and they lead the order)
-        "a15_snapshot_compact", "a25_transform_errors",
-        "a26_mergeschema_read", "a7_replay_stream", "c16_pagerank",
-        "c19_cooccur_similarity", "c21_hits",
-        "c23_clustering_coefficient", "c24_ire_identify",
-        "e11_windowed_count_distinct", "e13_ewma",
-        "e15_rank_distribution", "h15_variant", "h16_try_functions",
-        "h17_url_parse", "i10_stream_stream_join",
-        "i11_foreach_batch_merge", "i12_stream_session_window",
-        "i4_watermark_late", "i5_stream_dedup", "i6_stream_static_join",
-        "j10_multimodal", "j11_fingerprint", "j13_chunk_split",
-        "j14_hash_sample", "j2b_simhash", "j35_pq_adc",
-        "j37_kmeans_cluster", "j38_bm25", "j39_edit_distance_nn",
-        "j40_vocab_oov", "j47_hard_negatives", "j8_tfidf",
-        "j9_lang_stats", "j9b_quality_score", "j9c_lang_id",
-        "k3_grouped_map", "k4_pandas_udaf", "m4_image_decode",
-        "m5_audio_decode", "t18_golden_q1", "t19_golden_q6",
-        "t20_golden_q9", "t21_golden_q13", "t22_golden_q15",
-        "t23_golden_q16", "t24_golden_q20", "t25_golden_q8",
-        # r6 pass (50/50 green in CORRECTNESS_r06.json, including the two
-        # formerly-red i7/e12 after the HUGEINT-dtype oracle casts)
-        "a16_change_feed", "c18_scd2_intervals", "d19_time_rollup",
-        "d27_incremental_rollup", "d28_heavy_hitters", "e12_sessionize",
-        "e14_seq_pattern", "i13_stream_outer_join",
-        "i14_stream_quality_gate", "i15_stream_complete_agg",
-        "i16_stream_pii_redact", "i1_tumbling", "i2_sliding", "i3_session",
-        "i7_stateful_counter", "i8_watermark_inc", "i9_cdc_merge",
-        "j17_bigram_lm", "j20_mixture_sample", "j21_domain_cap",
-        "j22_decontaminate", "j23_pii_redact", "j24_repetition_filter",
-        "j25_incremental_dedup", "j26_train_eval_split", "j27_chunk_dedup",
-        "j28_quality_classifier", "j29_seq_pack", "j31_novelty_score",
-        "j32_winnowing", "j34_length_histogram",
-        "j36_cluster_representative", "j42_bpe_pair_stats",
-        "j43_importance_sample", "j44_feature_hashing", "j46_dataset_card",
-        "j48_bpe_merge_apply", "j49_char_entropy", "j51_temperature_sample",
-        "k1_udf_scalar", "k2_pandas_udf", "k5_udtf", "k7_pandas_iter_udf",
-        "m1_binary_features", "m2_binary_meta_join", "m6_binary_dedup",
-        "m7_modality_router", "p8_encoded_stream", "t10_cohort",
-        "t9_funnel",
-        # r7 pass (50/50 green in CORRECTNESS_r07.json — the driver
-        # fronted the never-checked backlog; 22 ids remain with no
-        # driver row and lead the r8 order, ~70 s of sf0.01 work total)
-        "a21_observed_metrics", "a23_corrupt_tolerant_scan",
-        "a24_permissive_json", "a6_sink_csv_json", "b15_dynamic_pruning",
-        "b18_lateral_topk", "b19_scalar_subquery", "c14_range_join",
-        "c15_join_asof_fwd", "c20_join_hints", "d17_approx_percentile",
-        "d18_hll_merge", "d21_zscore_outliers", "d22_corr_moments",
-        "d23_histogram", "d24_argmax_mode", "d25_bitmap_distinct",
-        "d26_weighted_median", "f6_keyset_page", "f7_exact_k_sample",
-        "f8_stratified_exact_k", "g7_delta_detect", "g8_orphan_audit",
-        "k10_sql_udf", "k8_arrow_grouped", "m3_frame_sample",
-        "p10_text_search", "p11_parameterized_sql", "p1_encoded_filter",
-        "p2_encoded_nq", "p3_encoded_ops", "p4_encoded_dotwalk",
-        "p5_dotwalk_select", "p6_encoded_agg", "p7_sql_passthrough",
-        "p9_sql_recursive", "t11_golden_q2", "t12_golden_q21",
-        "t13_golden_q4", "t14_golden_q7", "t15_golden_q17",
-        "t16_golden_q22", "t17_golden_q11", "t1_golden_q3",
-        "t2_golden_q5", "t3_golden_q10", "t5_golden_q12",
-        "t6_golden_q14", "t7_golden_q19", "t8_pipeline_curate",
-        # r8 pass (50/50 green in CORRECTNESS_r08.json — retired the
-        # 22-id never-checked backlog to zero)
-        "a14_sink_clustered", "a17_python_datasource",
-        "a18_python_stream_source", "a19_small_file_compact",
-        "a20_python_datasource_writer", "a22_zorder_sink",
-        "a5_sink_partitioned", "a8_rest_pushdown", "b16_bloom_join",
-        "c12_rel_closure_unbounded", "c13_reconcile", "c16_pagerank",
-        "c17_triangle_count", "c19_cooccur_similarity", "c21_hits",
-        "c22_k_core", "c23_clustering_coefficient", "d13_pivot",
-        "d15_unpivot", "d20_column_profile", "i17_stream_file_sink",
-        "j12_embedding_neardup", "j16_neardup_components",
-        "j2_minhash_lsh", "j2c_ngram_jaccard", "j35_pq_adc",
-        "j37_kmeans_cluster", "j38_bm25", "j39_edit_distance_nn",
-        "j3_cosine_knn", "j3b_ivf_knn", "j3c_lsh_ann", "j40_vocab_oov",
-        "j41_semdedup", "j47_hard_negatives", "j4_knn_join",
-        "j50_tau_sweep", "j52_containment_dedup", "j53_substring_dedup",
-        "j54_incremental_ivf", "j5_centroids", "j6_l2norm",
-        "t18_golden_q1", "t19_golden_q6", "t20_golden_q9",
-        "t21_golden_q13", "t22_golden_q15", "t23_golden_q16",
-        "t24_golden_q20", "t25_golden_q8",
-        # r9/r10 passes: the union of CORRECTNESS_r01..r10 is now the
-        # FULL registry (270/270 green) — only i18/i19 were missing
-        # here (first checked r9/r10). A brand-new id still auto-fronts
-        # by not being listed.
-        "i18_stream_incremental_rollup", "i19_stream_retract_rollup",
-        # r11 pass: i20 hard-signalled green in its first driver round.
-        "i20_stream_sink_compact",
-        # r12 pass: i21 hard-signalled green in its first driver round.
-        "i21_consistent_read",
-        # r13 pass (50/50 green in CORRECTNESS_r13.json — the full ≤r6
-        # stale cohort retired + the rowshuffle-fix family re-proved +
-        # i22's first-round hard signal). Only the ids NEW to the union
-        # matter here (i22 and the set difference), but the full green
-        # list is recorded for auditability. (i23 is r14's growth id
-        # and deliberately NOT listed — a new id must hard-signal in
-        # its first round.)
-        "i22_store_group_read",
-    }
-)
-
-
-#: measured sf0.01 end-to-end seconds per never-driver-checked id
-#: (one clean full-registry check_parity run, r7 closing session;
-#: near-dup family entries re-measured after the r7 driver testdata
-#: regen made `documents` dup-dense — j2's oracle alone costs multiple
-#: seconds there. Same work the driver's per-id check performs). The
-#: driver re-checks in registration order under a TIME budget, so the
-#: unchecked block sorts by this cost ASCENDING — a greedy
-#: shortest-job-first order maximizes the NUMBER of ids that gain a
-#: hard-signal row before the budget cuts off (the whole 72-id backlog
-#: sums to ~56 s of Spark time; front-loading the sub-second ids means
-#: even an early cutoff clears most of the count). Absolute seconds
-#: drift with machine state; the RANKING is what matters and is stable
-#: (the same ids topped every r5-r7 profile).
-_CHECK_COST_S = {
-    # r10 recheck ids (measured in the round-10 full sf0.01 run)
-    "t10_cohort": 0.5, "h8_higher_order": 1.5, "k4_pandas_udaf": 0.4,
-    "f6_keyset_page": 0.1, "f7_exact_k_sample": 0.1, "p10_text_search": 0.1,
-    "p2_encoded_nq": 0.1, "p3_encoded_ops": 0.1,
-    "f8_stratified_exact_k": 0.2, "k10_sql_udf": 0.2,
-    "m3_frame_sample": 0.2, "p11_parameterized_sql": 0.2,
-    "p1_encoded_filter": 0.2, "a23_corrupt_tolerant_scan": 0.3,
-    "b19_scalar_subquery": 0.3, "d25_bitmap_distinct": 0.3,
-    "g7_delta_detect": 0.3, "k8_arrow_grouped": 0.3, "p6_encoded_agg": 0.3,
-    "t13_golden_q4": 0.3, "t5_golden_q12": 0.3, "t7_golden_q19": 0.3,
-    "a21_observed_metrics": 0.4, "a6_sink_csv_json": 0.4,
-    "c20_join_hints": 0.4, "d18_hll_merge": 0.4, "d21_zscore_outliers": 0.4,
-    "d23_histogram": 0.4, "d24_argmax_mode": 0.4, "g8_orphan_audit": 0.4,
-    "p4_encoded_dotwalk": 0.4, "p7_sql_passthrough": 0.4,
-    "t12_golden_q21": 0.4, "t15_golden_q17": 0.4, "t16_golden_q22": 0.4,
-    "t1_golden_q3": 0.4, "t3_golden_q10": 0.4, "t6_golden_q14": 0.4,
-    "t8_pipeline_curate": 0.4, "b18_lateral_topk": 0.5,
-    "c15_join_asof_fwd": 0.5, "d22_corr_moments": 0.5,
-    "i17_stream_file_sink": 0.5, "p5_dotwalk_select": 0.5,
-    "t11_golden_q2": 0.5, "t2_golden_q5": 0.5, "c14_range_join": 0.6,
-    "d17_approx_percentile": 0.6, "p9_sql_recursive": 0.6,
-    "t14_golden_q7": 0.6, "t17_golden_q11": 0.6, "d26_weighted_median": 0.8,
-    "a24_permissive_json": 0.9, "b15_dynamic_pruning": 0.9,
-    "b16_bloom_join": 0.9, "j50_tau_sweep": 1.1, "a5_sink_partitioned": 1.0,
-    "a22_zorder_sink": 1.1, "c12_rel_closure_unbounded": 1.1,
-    "j12_embedding_neardup": 1.5,
-    "c17_triangle_count": 1.3, "c22_k_core": 1.3, "a14_sink_clustered": 1.4,
-    "a19_small_file_compact": 1.5, "a8_rest_pushdown": 1.8,
-    "d20_column_profile": 1.9, "j2c_ngram_jaccard": 2.1,
-    "j16_neardup_components": 2.6, "j52_containment_dedup": 3.1,
-    "j3c_lsh_ann": 3.5, "j41_semdedup": 4.3,
-    "a18_python_stream_source": 2.6, "a20_python_datasource_writer": 3.5,
-    "a17_python_datasource": 5.1, "j2_minhash_lsh": 7.6,
-    # r9 addition (measured sf0.01 parity-run cost incl. oracle)
-    "i18_stream_incremental_rollup": 5.0,
-    # r10 addition (measured sf0.01 parity-run cost incl. oracle)
-    "i19_stream_retract_rollup": 12.4,
-    # r11 addition (measured sf0.01 parity-run cost incl. oracle)
-    "i20_stream_sink_compact": 8.0,
-    # r12 addition (CORRECTNESS_r12 green; measured sf0.01 cost)
-    "i21_consistent_read": 4.5,
-    # r13 addition (CORRECTNESS_r13 green; measured sf0.01 cost —
-    # two group commits over two stores)
-    "i22_store_group_read": 3.4,
-    # i23 (r14 growth id, ~7 s sf0.01 incl. oracle — two compactions
-    # + the pinned v1 read) is deliberately NOT listed this round:
-    # a new id auto-fronts with cost −1 and must hard-signal inside
-    # any plausible budget cut. Add its cost here once
-    # CORRECTNESS_r14 records the green row.
-}
-
-#: true Structured Streaming ids among the unchecked — forced to the
-#: very end of the unchecked block REGARDLESS of cost: their
-#: state-store maintenance threads slow every query that runs after
-#: them ~1.5× (r1 evidence), which would silently inflate the
-#: remaining checks' cost and shrink the driver's effective budget.
-_STREAMING_LAST = frozenset({
-    "i17_stream_file_sink", "a18_python_stream_source",
-    # true-streaming members of the r8/r9 recheck block (state-store
-    # threads inflate every later check ~1.5×, r1 evidence)
-    "i4_watermark_late", "i5_stream_dedup", "i7_stateful_counter",
-    "i10_stream_stream_join", "i12_stream_session_window",
-    "i13_stream_outer_join", "i15_stream_complete_agg",
-    "i16_stream_pii_redact", "i18_stream_incremental_rollup",
-    "i19_stream_retract_rollup", "i20_stream_sink_compact",
-})
-
-#: ids whose ENGINE or ORACLE code changed in rounds 8–9 (r8 pathdocs/
-#: timewarp/byte-exact-oracle sweeps; r9 EMAIL_PAT_G boundary guard,
-#: METRIC_BOUND/SQL_FINITE interpolation, j54 index-dir reuse). All are
-#: driver-green at an OLDER check; fronting them spends the driver's
-#: 50-id budget re-proving exactly the code that moved (r8 verdict
-#: punch-list item 3) instead of re-checking untouched greens.
-_RECHECK_FIRST = frozenset({
-    # Rebuilt for r14 (r13 verdict item 1 — "retire the staleness
-    # question"): front the ENTIRE 43-id cohort whose latest driver
-    # row is r7 plus the 6 cheapest r8 ids (shortest-job-first by
-    # _CHECK_COST_S, name tiebreak), so the block is EXACTLY 49
-    # listed + the auto-fronting growth id i23 = 50 (robust even if
-    # the driver's budget is a hard 50-id cap). After r14 the
-    # registry's staleness floor rises to r8 (17 r8 ids left for
-    # r15) and every id has a driver row within the last 7 rounds.
-    #
-    # The r14 code-moved ids (a15/a16/i21/i22 fail-loud + gap-refusal
-    # + full-width change feed; the fixpoint family's path-boundary
-    # ckpt pin) are deliberately NOT re-fronted: all were driver-green
-    # in r13, every one is exact-value parity-green on the final r14
-    # code (tools/check_parity.py, SCALING.md round-14), and the slots
-    # are the verdict's priority — they rotate back in r15.
-    #
-    # (a) the full 43-id r7 cohort:
-    "a21_observed_metrics", "a23_corrupt_tolerant_scan",
-    "a24_permissive_json", "a6_sink_csv_json", "b15_dynamic_pruning",
-    "b18_lateral_topk", "b19_scalar_subquery", "c15_join_asof_fwd",
-    "c20_join_hints", "d17_approx_percentile", "d18_hll_merge",
-    "d22_corr_moments", "d23_histogram", "d24_argmax_mode",
-    "d25_bitmap_distinct", "d26_weighted_median",
-    "f8_stratified_exact_k", "g7_delta_detect", "g8_orphan_audit",
-    "k10_sql_udf", "k8_arrow_grouped", "p11_parameterized_sql",
-    "p1_encoded_filter", "p2_encoded_nq", "p3_encoded_ops",
-    "p4_encoded_dotwalk", "p5_dotwalk_select", "p6_encoded_agg",
-    "p7_sql_passthrough", "p9_sql_recursive", "t11_golden_q2",
-    "t13_golden_q4", "t14_golden_q7", "t15_golden_q17",
-    "t16_golden_q22", "t17_golden_q11", "t1_golden_q3",
-    "t2_golden_q5", "t3_golden_q10", "t5_golden_q12",
-    "t6_golden_q14", "t7_golden_q19", "t8_pipeline_curate",
-    # (b) the 6 cheapest r8 ids by measured check cost:
-    "b16_bloom_join", "a5_sink_partitioned", "a22_zorder_sink",
-    "c17_triangle_count", "a14_sink_clustered",
-    "a19_small_file_compact",
-})
-
-
-def _reorder_for_driver_budget() -> None:
-    """Rebuild registry dict order: (1) never-driver-checked ids (none
-    remain as of r8 — every id has a green row) plus the
-    _RECHECK_FIRST block (code moved in r8/r9, green row is stale),
-    sorted shortest-job-first by measured sf0.01 cost (_CHECK_COST_S),
-    true-streaming ids last within the block; (2) the remaining
-    ever-driver-green ids after. Any id NOT in _DRIVER_GREEN and NOT
-    in the cost table (a brand-new registration) auto-fronts with
-    cost −1: a new id must hard-signal in its first round."""
-    ids = list(registry.QUERIES)
-    front = sorted(
-        (q for q in ids if q not in _DRIVER_GREEN or q in _RECHECK_FIRST),
-        key=lambda q: (q in _STREAMING_LAST, _CHECK_COST_S.get(q, -1.0), q),
-    )
-    seen = set(front)
-    order = front + [q for q in ids if q not in seen]
-    for d in (registry.QUERIES, registry.ORACLE):
-        snap = {k: d[k] for k in order if k in d}
-        d.clear()
-        d.update(snap)
+def driver_order(ids: Iterable[str], path: Path) -> list[str]:
+    """Order ``ids`` for a correctness check that walks ``queries()`` in
+    dict order and stops after a fixed count: ids missing from the JSON at
+    ``path`` first (a new id needs no edit), then the JSON's order.
+    Without the file, plain registration order."""
+    ids = list(ids)
+    if not path.exists():
+        return ids
+    registered = set(ids)
+    listed = [q for q in json.loads(path.read_text()) if q in registered]
+    seen = set(listed)
+    return [q for q in ids if q not in seen] + listed
 
 
 __all__ = ["QUERIES", "ORACLE", "load_all", "registry", "CmdbEngine"]

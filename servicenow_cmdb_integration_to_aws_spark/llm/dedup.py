@@ -28,21 +28,13 @@ near-duplicate detection, built entirely from native Spark expressions
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.fixpoint import _MAD
 from ..registry import query
 from ..sources.tables import scan, spread
 from .canon import canon_docs, canon_oracle
-
-#: lazy materialization level for multi-consumer pipeline intermediates.
-#: persist, NOT localCheckpoint: under AQE even eager=False
-#: checkpointing runs the upstream stages at plan-CONSTRUCTION time
-#: (measured: jobs fire before any action), and checkpoint blocks are
-#: non-recoverable on executor loss; persist stays lazy and recomputes
-#: from lineage.
-_MAD = StorageLevel.MEMORY_AND_DISK
 
 N_HASHES = 32
 N_BANDS = 16
@@ -643,7 +635,7 @@ def _collapsed_sets(tok: DataFrame):
     (digest, size) groups, and distinct (digest, token) membership.
     Each is lazily persisted: they feed several consumers and Spark
     plans duplicate the full upstream lineage per consumer (see the
-    module _MAD note); these are exactly the tables a production
+    fixpoint._MAD note); these are exactly the tables a production
     minhash pipeline persists, and the shuffles carry 16-byte digests
     plus tokens, never document text."""
     tok = tok.persist(_MAD)

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .canon import canon_docs, canon_oracle
+from ..operators.fixpoint import _MAD
 from ..registry import query
 from ..sources.tables import scan, spread
 
@@ -123,11 +124,7 @@ def j27_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # correctly). A 100 TB job runner that wants deterministic release
     # should call df.unpersist() on its own schedule after the sink
     # action completes.
-    from pyspark import StorageLevel
-
-    ch = ch.withColumn("dig", F.md5("chunk_txt")).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    ch = ch.withColumn("dig", F.md5("chunk_txt")).persist(_MAD)
     freq = ch.groupBy("dig").agg(
         F.count_distinct("doc_id").alias("ndocs")
     )

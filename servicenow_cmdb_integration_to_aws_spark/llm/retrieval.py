@@ -19,20 +19,14 @@ shuffle that a digest or id could ride instead.
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .canon import canon_docs, canon_oracle, canon_vecs
+from ..operators.fixpoint import _MAD
 from ..registry import query
 from ..sources.tables import scan
 from .vectors import VOK  # vector-quality gate, SQL twin (r9)
-
-#: lazy materialization for multi-consumer intermediates (persist, not
-#: localCheckpoint: under AQE eager=False checkpointing executes the
-#: upstream stages at plan-construction time and its blocks are
-#: non-recoverable on executor loss; persist stays lazy + recomputable).
-_MAD = StorageLevel.MEMORY_AND_DISK
 
 _K = 8  # j37 cluster count
 _ITERS = 2  # j37 Lloyd iterations (unrolled identically in the oracle)
@@ -170,8 +164,6 @@ def j37_kmeans_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     # be assigned: vec_ok gate, symmetric with the oracle's WHERE (r9)
     from .vectors import vec_ok
 
-    from pyspark import StorageLevel
-
     # lazy persist (r14): `e` feeds the seed top-K scan, both Lloyd
     # assignment passes and the recenter — four consumers, none served
     # by ReusedExchange (broadcast joins exchange nothing). Interleaved
@@ -181,7 +173,7 @@ def j37_kmeans_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
         canon_vecs(spark, sf_dir)
         .filter(vec_ok())
         .select("vec_id", _dvec("embedding").alias("v"))
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ).persist(_MAD)
     # top-K by hash via orderBy+limit = TakeOrderedAndProject (per-
     # partition heaps + driver merge, never a full corpus sort); the
     # row_number window then ranks only those K rows.
@@ -460,8 +452,6 @@ def j39_edit_distance_nn(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The cached frame is one row per doc (3 scalars), disk-spillable
     # and lineage-recoverable; at 100 TB prefer writing the NN table
     # and sorting on read, same one-materialization principle.
-    from .vectors import _MAD
-
     return (
         d.groupBy("lang", "bucket")
         .applyInPandas(nn, "doc_id long, other_id long, dist int")

@@ -11,17 +11,13 @@ document-frequency side is tiny (vocabulary-sized) and broadcast back.
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .canon import canon_docs, canon_oracle
+from ..operators.fixpoint import _MAD
 from ..registry import query
 from ..sources.tables import scan, spread
-
-#: persist level for tiny multi-consumer intermediates (the dedup.py
-#: discipline: lazy, lineage-recoverable — never localCheckpoint).
-_MAD = StorageLevel.MEMORY_AND_DISK
 
 
 def _doc_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -152,13 +148,11 @@ def j8_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     construction time (gated by test_no_eager_jobs_during_plan_
     construction); persist stays fully lazy. The final doc_id top-3
     window is group-limited and skew-safe."""
-    from pyspark import StorageLevel
-
     tf = (
         _doc_tokens(spark, sf_dir)
         .groupBy("doc_id", F.col("tok").alias("term"))
         .agg(F.count(F.lit(1)).alias("tf"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .persist(_MAD)
     )
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     # corpus size as a 1-row broadcast, NOT an eager .count(): the

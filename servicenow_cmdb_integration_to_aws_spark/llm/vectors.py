@@ -23,19 +23,13 @@ from __future__ import annotations
 
 import os
 
-from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .canon import canon_oracle, canon_vecs
+from ..operators.fixpoint import _MAD
 from ..registry import query
 from ..sources.tables import scan
-
-#: lazy materialization for multi-consumer intermediates (persist, not
-#: localCheckpoint: under AQE eager=False checkpointing executes the
-#: upstream stages at plan-construction time and its blocks are
-#: non-recoverable on executor loss; persist stays lazy + recomputable).
-_MAD = StorageLevel.MEMORY_AND_DISK
 
 _D = lambda x: x.cast("double")  # noqa: E731
 
@@ -461,8 +455,6 @@ def _pair_block_kernel(key, pdf):
         lb = B["embedding"].map(len).to_numpy()
         for L in np.intersect1d(np.unique(la), np.unique(lb)):
             Ai, Bi = A[la == L], B[lb == L]
-            if L == 0:
-                continue  # zero-length vectors fail vec_ok upstream
             MA = np.stack(Ai["embedding"].to_numpy()).astype(np.float64)
             MB = np.stack(Bi["embedding"].to_numpy()).astype(np.float64)
             ida = Ai["vec_id"].to_numpy()
@@ -736,13 +728,11 @@ def j3c_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ~26% candidate subset a second time. The probe machinery
     # (buckets → cand) is untouched; a production deployment still
     # drops the audit branch and scores candidates only.
-    from pyspark import StorageLevel
-
     all_scored = (
         e.filter(F.col("vec_id") != 0)
         .crossJoin(F.broadcast(q))
         .select("vec_id", F.round(cosine("embedding", "qv"), 6).alias("cos_sim"))
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ).persist(_MAD)
     lsh10 = (
         all_scored.join(cand, "vec_id")
         .orderBy(F.col("cos_sim").desc(), "vec_id")

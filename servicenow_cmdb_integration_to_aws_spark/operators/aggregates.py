@@ -19,12 +19,12 @@ scale prefer approx_count_distinct (d5) when tolerance allows.
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources.tables import scan
+from .fixpoint import _MAD
 from .numeric import FIN, dec, dsum, finite_metric  # shared helpers (re-exported for compat)
 
 __all__ = ["dec", "dsum"]
@@ -493,12 +493,12 @@ def d18_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = (
         e.select("event_type", "user_id")
         .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .persist(_MAD)
     )
     per = pairs.groupBy("event_type").agg(
         F.hll_sketch_agg("user_id", F.lit(14)).alias("sk"),
         F.count("user_id").alias("exact_users"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ).persist(_MAD)
     tol = 0.02
     within = (
         F.abs(

@@ -25,12 +25,22 @@ truncation on the reliable path). Unset ⇒ local, the measured-optimal
 single-cluster default.
 
 This module deliberately imports no operator modules (import order is
-the driver's check order; see ``load_all``).
+the registration order; see ``load_all``).
 """
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
+
+#: lazy materialization level for single-pass multi-consumer
+#: intermediates. persist, NOT localCheckpoint: under AQE even
+#: eager=False checkpointing runs the upstream stages at plan-
+#: CONSTRUCTION time, and checkpoint blocks are non-recoverable on
+#: executor loss; persist stays lazy and recomputes from lineage.
+#: ITERATIVE truncation (a fixpoint's per-round state) goes through
+#: :func:`cut_lineage` instead — there cutting lineage is the point.
+_MAD = StorageLevel.MEMORY_AND_DISK
 
 #: Runtime conf key selecting reliable fixpoint checkpoints. Value =
 #: the checkpoint directory on fault-tolerant storage. Empty/unset =

@@ -13,23 +13,12 @@ into the next iteration.
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources.tables import scan
-from .fixpoint import cut_lineage
-
-#: lazy materialization for single-pass multi-consumer intermediates
-#: (persist, not localCheckpoint: under AQE eager=False checkpointing
-#: executes the upstream stages at plan-construction time and its
-#: blocks are non-recoverable on executor loss). The ITERATIVE
-#: truncation sites below (c22's per-round edge sets) go through
-#: fixpoint.cut_lineage — there the point IS cutting lineage so plans
-#: don't grow per round, and the round boundary is a deliberate
-#: materialization barrier (reliable-checkpoint option included).
-_MAD = StorageLevel.MEMORY_AND_DISK
+from .fixpoint import _MAD, cut_lineage
 
 _DAMP = 0.85
 _PR_ITERS = 2

@@ -26,6 +26,7 @@ compactors serialize, concurrent readers never block.
 
 from __future__ import annotations
 
+import errno
 import json
 import os
 import tempfile
@@ -142,7 +143,9 @@ def _stage_batch_dirs2(df: DataFrame, bucket_a, bucket_b):
             out = os.path.join(dest, f"a{av}-b{bv}-{rel[-1]}")
             try:
                 os.link(f, out)
-            except OSError:  # cross-device staging: fall back to copy
+            except OSError as err:  # cross-device staging: fall back to copy
+                if err.errno != errno.EXDEV:  # e.g. dest exists: fail loudly
+                    raise
                 shutil.copy2(f, out)
 
     def done() -> None:
@@ -949,18 +952,8 @@ def i21_consistent_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     take, done = _stage_batch_dirs(e, third)
     for i in (0, 1):
         take(i, os.path.join(log_dir, f"batch_id={i}"))
-    # the two generation-1 folds are independent single-store jobs
-    # (separate roots/flocks, shared immutable log batches) — overlap
-    # them so one fold's task tail backfills with the other's work
-    # (r15, guide §2.6); the straddle protocol below is untouched
-    # because BOTH folds complete before batch 2 enters the log.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(2) as pool:
-        fa = pool.submit(store_a.compact, spark, log_dir)
-        fb = pool.submit(store_b.compact, spark, log_dir)
-        _require(fa.result() == 1, "i21: A fold 1 != v1")
-        _require(fb.result() == 1, "i21: B fold 1 != v1")
+    _require(store_a.compact(spark, log_dir) == 1, "i21: A fold 1 != v1")
+    _require(store_b.compact(spark, log_dir) == 1, "i21: B fold 1 != v1")
     take(2, os.path.join(log_dir, "batch_id=2"))
     done()
     # A leads: through batch 2. B's compactor has NOT run: the

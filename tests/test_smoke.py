@@ -15,6 +15,31 @@ def test_contract_shape():
         assert callable(fn), qid
 
 
+def test_driver_order_rule(tmp_path):
+    """Unlisted ids lead in registration order, listed ids follow the
+    JSON order, and without the JSON registration order holds."""
+    import json
+
+    from servicenow_cmdb_integration_to_aws_spark import driver_order
+
+    path = tmp_path / "driver_order.json"
+    ids = ["x1", "new_b", "x2", "x3", "new_a"]
+    assert driver_order(ids, path) == ids
+    path.write_text(json.dumps(["x3", "gone", "x1", "x2"]))
+    assert driver_order(ids, path) == ["new_b", "new_a", "x3", "x1", "x2"]
+
+
+def test_committed_driver_order_names_registered_ids_once():
+    import json
+
+    from servicenow_cmdb_integration_to_aws_spark import DRIVER_ORDER_JSON
+
+    listed = json.loads(DRIVER_ORDER_JSON.read_text())
+    assert len(listed) == len(set(listed))
+    assert set(listed) <= set(entrymod.queries())
+    assert list(entrymod.queries())[-len(listed) :] == listed
+
+
 def test_entry_flagship(spark):
     df = entrymod.entry(spark)
     rows = df.collect()

@@ -983,6 +983,29 @@ def test_staged_dir_evicted_on_inplace_regen(spark, tmp_path):
     assert [k for k in _STAGED_DOCS if k == str(sfd)] == [str(sfd)]
 
 
+def test_stage_batch_dirs2_take_refuses_to_overwrite(spark, tmp_path):
+    """Two-log staging links part files into a batch dir; taking the
+    same value into the same dest twice must fail loudly — only a
+    cross-device link falls back to a copy, never an existing file."""
+    from servicenow_cmdb_integration_to_aws_spark.streaming.compaction import (
+        _stage_batch_dirs2,
+    )
+
+    df = spark.range(6).withColumnRenamed("id", "k")
+    take, done = _stage_batch_dirs2(df, F.col("k") % 2, F.col("k") % 3)
+    dest = str(tmp_path / "batch_id=0")
+    try:
+        take("a", 0, dest)
+        staged = sorted(os.listdir(dest))
+        assert staged
+        with pytest.raises(FileExistsError):
+            take("a", 0, dest)
+        assert sorted(os.listdir(dest)) == staged
+        assert sorted(r.k for r in spark.read.parquet(dest).collect()) == [0, 2, 4]
+    finally:
+        done()
+
+
 @pytest.mark.parametrize(
     "point,nth",
     [
