@@ -44,6 +44,10 @@ RUNTIME_CONFS: dict[str, str] = {
     # let Python Data Sources receive pushed filters (rest_source.py —
     # the sysparm_query pushdown path)
     "spark.sql.python.filterPushdown.enabled": "true",
+    # the TIMESTAMP(NANOS) events generation is readable only as raw
+    # nanos (sources.tables.scan / streaming._stream_events convert it);
+    # pinned here so no read depends on which query set it first
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
 }
 
 

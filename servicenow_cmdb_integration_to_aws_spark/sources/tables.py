@@ -195,7 +195,6 @@ def _scan_build(
     (df, needs_utc): needs_utc marks the NTZ-events generation whose
     cast resolves against the session tz at execution."""
     if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         df = _read_cached(spark, sf_dir, name)
         ts_type = dict(df.dtypes)["ts"]
         if ts_type == "bigint":  # ns-as-long generation
@@ -242,11 +241,7 @@ def scan(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     the content stamp (an in-place testdata regen misses and
     re-derives, superseded generations are evicted), and derivations
     (.select/.filter/...) always create NEW DataFrames so sharing the
-    base object leaks nothing between queries. events keeps its
-    nanosAsLong conf-pin on every call (the conf is read at scan
-    planning; a cached fragment must not depend on who built it)."""
-    if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    base object leaks nothing between queries."""
     key = (sf_dir, name, content_stamp(path_of(sf_dir, name)))
     with _SCAN_DF_LOCK:
         cache = getattr(spark, "_cmdb_scan_df_cache", None)

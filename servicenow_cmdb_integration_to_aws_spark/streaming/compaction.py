@@ -49,84 +49,43 @@ def _require(ok: bool, what: str) -> None:
         raise RuntimeError(what)
 
 
-def _stage_batch_dirs(df: DataFrame, bucket):
+def _stage_batch_dirs(df: DataFrame, **buckets):
     """Materialize every log batch of ``df`` in ONE Spark job and hand
-    back a ``take(value, dest)`` mover (r14, guide §6: one pass over
-    the source instead of one filtered scan+write job PER batch — the
-    a15/a16/i21/i22/i23 bodies paid 2-5 full source scans each).
+    back a ``take(axis, value, dest)`` mover (r14/r15, guide §6: one
+    pass over the source instead of one filtered scan+write job PER
+    batch — and one pass for i22's two unrelated batch sequences).
 
-    ``bucket`` is the batch-assignment expression; a dynamic-partition
-    write splits the rows by its value in a single job. ``take`` then
-    MOVES the staged ``__batch=<value>`` directory to ``dest`` (a
-    ``batch_id=N`` log dir) — a metadata rename, so each batch still
-    enters the log exactly at its protocol point: compactions between
-    takes see exactly the batches taken so far, preserving the
-    multi-generation fold sequences unchanged. Rows where ``bucket``
-    is NULL are dropped, mirroring the original per-batch filters
-    (a15's bare ``% 2`` drops NULL/negative ids from both halves by
-    declared contract). A bucket value with NO rows (degenerate
-    corpora — the --limit fuzz axis) stages an empty batch dir with
-    the source schema, exactly like the old empty filtered write. The
-    partition column rides only the write; staged data files keep the
-    source schema."""
-    import shutil
-
-    tmp = tempfile.mkdtemp(prefix="stage_batches_")
-    (
-        df.withColumn("__batch", bucket)
-        .write.mode("overwrite")
-        .partitionBy("__batch")
-        .parquet(tmp)
-    )
-
-    def take(value, dest: str) -> None:
-        src = os.path.join(tmp, f"__batch={value}")
-        if os.path.isdir(src):
-            shutil.move(src, dest)
-        else:
-            df.limit(0).write.mode("overwrite").parquet(dest)
-
-    def done() -> None:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-    return take, done
-
-
-def _stage_batch_dirs2(df: DataFrame, bucket_a, bucket_b):
-    """Two-log staging in ONE source pass (r15, guide §6): i22 feeds
-    two UNRELATED batch sequences from the same corpus — two
-    :func:`_stage_batch_dirs` calls scanned and wrote the full source
-    TWICE. One dynamic-partition write by the composite ``(__a, __b)``
-    stages both splits at once; ``take(axis, value, dest)`` then
-    HARD-LINKS the matching part files into the log batch dir (a row
-    with ``__a=h, __b=t`` belongs to log A's batch h AND log B's batch
-    t, so neither take may move the file — links share the bytes, and
-    each log's retention deletes its own links independently). Falls
-    back to a copy across filesystems. Batches still enter each log
-    exactly at their protocol points via ``take``; an empty bucket
-    value stages an empty batch dir with the source schema, as before.
-    PRECONDITION (callers'): both bucket expressions are non-NULL for
-    every row — i22 builds them over ``coalesce(event_id, 0)``. At
-    100 TB the staged files are the fixture INPUT build (the log an
-    upstream sink would have written), not query output; halving its
-    source passes is the same §6 win as the r14 fusion."""
+    Each keyword names a bucket axis and its batch-assignment
+    expression (``_stage_batch_dirs(df, a=half, b=third)``); one
+    dynamic-partition write by the composite ``(__a, __b, ...)``
+    stages every split at once. ``take`` HARD-LINKS the part files
+    whose ``axis`` bucket equals ``value`` into ``dest`` (a
+    ``batch_id=N`` log dir): a row with ``__a=h, __b=t`` belongs to
+    log A's batch h AND log B's batch t, so no take may move the file
+    — links share the bytes, and each log's retention deletes its own
+    links independently. Falls back to a copy across filesystems.
+    Each batch still enters its log exactly at its protocol point:
+    compactions between takes see exactly the batches taken so far.
+    A row whose bucket on the taken axis is NULL or a value nobody
+    takes is never taken (a15's bare ``% 2`` drops NULL/negative ids
+    from both halves by declared contract). A bucket value with NO
+    rows (degenerate corpora — the --limit fuzz axis) stages an empty
+    batch dir with the source schema. The partition columns ride only
+    the write; staged data files keep the source schema. At 100 TB the
+    staged files are the fixture INPUT build (the log an upstream sink
+    would have written), not query output."""
     import glob
     import shutil
 
-    tmp = tempfile.mkdtemp(prefix="stage_batches2_")
-    (
-        df.withColumn("__a", bucket_a)
-        .withColumn("__b", bucket_b)
-        .write.mode("overwrite")
-        .partitionBy("__a", "__b")
-        .parquet(tmp)
-    )
+    cols = {f"__{axis}": bucket for axis, bucket in buckets.items()}
+    tmp = tempfile.mkdtemp(prefix="stage_batches_")
+    df.withColumns(cols).write.mode("overwrite").partitionBy(*cols).parquet(tmp)
 
     def take(axis: str, value, dest: str) -> None:
-        pat = (
-            os.path.join(tmp, f"__a={value}", "__b=*", "*.parquet")
-            if axis == "a"
-            else os.path.join(tmp, "__a=*", f"__b={value}", "*.parquet")
+        pat = os.path.join(
+            tmp,
+            *(f"__{x}={value if x == axis else '*'}" for x in buckets),
+            "*.parquet",
         )
         files = sorted(glob.glob(pat))
         if not files:
@@ -134,13 +93,13 @@ def _stage_batch_dirs2(df: DataFrame, bucket_a, bucket_b):
             return
         os.makedirs(dest, exist_ok=True)
         for f in files:
-            # disambiguate with BOTH partition values: a dynamic-
+            # disambiguate with EVERY partition value: a dynamic-
             # partition write reuses the same part filename across
             # sibling dirs (one task, one name), so a single-component
             # prefix collides for the axis whose value is fixed
-            rel = os.path.relpath(f, tmp).split(os.sep)
-            av, bv = rel[0].split("=", 1)[1], rel[1].split("=", 1)[1]
-            out = os.path.join(dest, f"a{av}-b{bv}-{rel[-1]}")
+            *dirs, name = os.path.relpath(f, tmp).split(os.sep)
+            tag = "-".join(d[2:].replace("=", "", 1) for d in dirs)
+            out = os.path.join(dest, f"{tag}-{name}")
             try:
                 os.link(f, out)
             except OSError as err:  # cross-device staging: fall back to copy
@@ -591,15 +550,15 @@ def a15_snapshot_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # a compaction after EACH — v2 must fold v1 with the new batch.
     # Halves split by event_id parity so both generations touch keys.
     # Both batches are staged in ONE source pass (guide §6); each
-    # enters the log only at its protocol point via the metadata move,
+    # enters the log only at its protocol point via take(),
     # so the two-generation fold sequence is unchanged.
     parity = F.when(F.col("event_id") % 2 == 0, 0).when(
         F.col("event_id") % 2 == 1, 1
     )
-    take, done = _stage_batch_dirs(e, parity)
-    take(0, os.path.join(log_dir, "batch_id=0"))
+    take, done = _stage_batch_dirs(e, a=parity)
+    take("a", 0, os.path.join(log_dir, "batch_id=0"))
     _require(store.compact(spark, log_dir) == 1, "a15: first fold is not v1")
-    take(1, os.path.join(log_dir, "batch_id=1"))
+    take("a", 1, os.path.join(log_dir, "batch_id=1"))
     done()
     _require(store.compact(spark, log_dir) == 2, "a15: second fold is not v2")
     return store.read(spark).select(*cols)
@@ -673,10 +632,10 @@ def a16_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     parity = F.when(F.col("event_id") % 2 == 0, 0).when(
         F.col("event_id") % 2 == 1, 1
     )
-    take, done = _stage_batch_dirs(e, parity)
-    take(0, os.path.join(log_dir, "batch_id=0"))
+    take, done = _stage_batch_dirs(e, a=parity)
+    take("a", 0, os.path.join(log_dir, "batch_id=0"))
     _require(store.compact(spark, log_dir) == 1, "a16: first fold is not v1")
-    take(1, os.path.join(log_dir, "batch_id=1"))
+    take("a", 1, os.path.join(log_dir, "batch_id=1"))
     done()
     _require(store.compact(spark, log_dir) == 2, "a16: second fold is not v2")
     return store.changes(spark, 1, 2)
@@ -949,12 +908,12 @@ def i21_consistent_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     # all three batches staged in ONE source pass (guide §6); batch 2
     # only enters the shared log after the first compacts, exactly as
     # the per-batch writes did.
-    take, done = _stage_batch_dirs(e, third)
+    take, done = _stage_batch_dirs(e, a=third)
     for i in (0, 1):
-        take(i, os.path.join(log_dir, f"batch_id={i}"))
+        take("a", i, os.path.join(log_dir, f"batch_id={i}"))
     _require(store_a.compact(spark, log_dir) == 1, "i21: A fold 1 != v1")
     _require(store_b.compact(spark, log_dir) == 1, "i21: B fold 1 != v1")
-    take(2, os.path.join(log_dir, "batch_id=2"))
+    take("a", 2, os.path.join(log_dir, "batch_id=2"))
     done()
     # A leads: through batch 2. B's compactor has NOT run: the
     # manifests now straddle (the state a naive two-store join
@@ -1266,9 +1225,9 @@ def i22_store_group_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     half, third = F.pmod(key, F.lit(2)), F.pmod(key, F.lit(3))
     # BOTH logs staged in ONE source pass (r15, guide §6 — the two
     # r14 per-log passes fused via the composite (half, third)
-    # partition write; see _stage_batch_dirs2). Each batch still
+    # partition write; see _stage_batch_dirs). Each batch still
     # enters its log only at its protocol point, exactly as before.
-    take, done = _stage_batch_dirs2(e, half, third)
+    take, done = _stage_batch_dirs(e, a=half, b=third)
     take("a", 0, os.path.join(log_a, "batch_id=0"))
     for i in (0, 1):
         take("b", i, os.path.join(log_b, f"batch_id={i}"))
@@ -1393,11 +1352,11 @@ def i23_time_travel_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     parity = F.when(F.col("event_id") % 2 == 0, 0).when(
         F.col("event_id") % 2 == 1, 1
     )
-    take, done = _stage_batch_dirs(e, parity)
-    take(0, os.path.join(log_dir, "batch_id=0"))
+    take, done = _stage_batch_dirs(e, a=parity)
+    take("a", 0, os.path.join(log_dir, "batch_id=0"))
     _require(store.compact(spark, log_dir) == 1, "i23: first fold is not v1")
     pinned = store.read_version(spark, 1)  # resolved at _LATEST == v1
-    take(1, os.path.join(log_dir, "batch_id=1"))
+    take("a", 1, os.path.join(log_dir, "batch_id=1"))
     done()
     _require(store.compact(spark, log_dir) == 2, "i23: second fold is not v2")
     _require(

@@ -2,10 +2,12 @@
 i4–i7). Rows-only checks (the DuckDB oracle is batch; the matching
 batch equivalents in batch_equiv.py carry the SQL oracles).
 
-Each operator builds a `readStream` over the events parquet, runs with
-`trigger(availableNow=True)` to a memory sink for determinism, and
-returns the materialized result — the exact same logical plan a 24/7
-micro-batch job would run; only the trigger differs (SURVEY §3.3).
+Each operator builds a `readStream` over the events parquet and runs
+it through :func:`_drain` with `trigger(availableNow=True)` for
+determinism — the exact same logical plan a 24/7 micro-batch job would
+run; only the trigger differs (SURVEY §3.3). `_drain` pins the state
+partitions only across `start()`, where the query clones the session,
+so the caller's conf is never left changed.
 
 100 TB notes: state (windows, dedup keys, per-user counters) lives in
 the executor state store, partitioned by key — nothing driver-side.
@@ -20,6 +22,7 @@ import itertools
 import os
 import shutil
 import tempfile
+import threading
 
 import numpy as np
 import pandas as pd
@@ -179,7 +182,6 @@ def _events_ts_kind(spark: SparkSession, sf_dir: str) -> str:
     stamp = content_stamp(path_of(sf_dir, "events"))
     hit = _TS_KIND.get(sf_dir)
     if hit is None or hit[0] != stamp:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         ts_type = dict(spark.read.parquet(path_of(sf_dir, "events")).dtypes)["ts"]
         hit = (stamp, "nanos" if ts_type == "bigint" else "micros")
         _TS_KIND[sf_dir] = hit
@@ -191,7 +193,6 @@ def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     session-tz TimestampType `ts` regardless of file generation
     (mirrors sources.tables.scan's footer-type branch)."""
     if _events_ts_kind(spark, sf_dir) == "nanos":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         raw = (
             spark.readStream.schema(_EVENTS_NANOS_SCHEMA)
             .format("parquet")
@@ -209,34 +210,73 @@ def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return raw.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
-def _run_to_memory(sdf: DataFrame, output_mode: str = "append") -> DataFrame:
-    """Execute a streaming plan to completion (availableNow) into an
-    in-memory table; return the materialized DataFrame.
+#: state-store partitions every streaming query checkpoints with:
+#: the count is frozen at the first checkpoint, and 32 state
+#: partitions over a tiny local corpus just spin 32 Python workers per
+#: micro-batch for the pandas-state ops. (On a cluster the right value
+#: is sized to key cardinality — it cannot change after the checkpoint
+#: is created.)
+_STATE_PARTITIONS = "8"
 
-    The state-store partition count is frozen from
-    ``spark.sql.shuffle.partitions`` at the first checkpoint; 32 state
-    partitions over a tiny local corpus just spin 32 Python workers per
-    micro-batch for the pandas-state ops, so streaming runs pin it to 8
-    and restore the caller's value after. (On a cluster the right value
-    is sized to key cardinality — state partitions cannot change after
-    the checkpoint is created.)"""
-    spark = sdf.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    name = f"mem_sink_{os.getpid()}_{next(_COUNTER)}"
+#: serializes the pin/restore of the caller's shuffle.partitions across
+#: concurrent drains — unserialized, two interleaved saves/restores can
+#: leave the caller at the pinned value for good
+_PIN_LOCK = threading.Lock()
+
+
+def _drain(spark: SparkSession, writer) -> None:
+    """Run ``writer`` (a configured ``DataStreamWriter``) to completion
+    under ``trigger(availableNow=True)`` with a throwaway checkpoint.
+    The package's only streaming ``start()``.
+
+    ``shuffle.partitions`` is pinned on ``spark`` only across
+    ``start()``: StreamExecution clones the session in its
+    constructor, so the query keeps the pinned state partitions while
+    the caller's value is restored before the wait."""
+    ckpt = tempfile.mkdtemp(prefix="ckpt_")
     try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        q = (
-            sdf.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-            .trigger(availableNow=True)
-            .start()
+        writer = writer.option("checkpointLocation", ckpt).trigger(
+            availableNow=True
         )
+        with _PIN_LOCK:
+            prev = spark.conf.get("spark.sql.shuffle.partitions")
+            spark.conf.set("spark.sql.shuffle.partitions", _STATE_PARTITIONS)
+            try:
+                q = writer.start()
+            finally:
+                spark.conf.set("spark.sql.shuffle.partitions", prev)
         q.awaitTermination()
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return sdf.sparkSession.table(name)
+        shutil.rmtree(ckpt, ignore_errors=True)
+
+
+def _run_to_memory(sdf: DataFrame, output_mode: str = "append") -> DataFrame:
+    """Execute a streaming plan to completion (:func:`_drain`) into an
+    in-memory table; return the materialized DataFrame. The sink's
+    temp view is dropped before returning — the DataFrame keeps the
+    rows, the session catalog does not."""
+    spark = sdf.sparkSession
+    name = f"mem_sink_{os.getpid()}_{next(_COUNTER)}"
+    _drain(
+        spark,
+        sdf.writeStream.format("memory").queryName(name).outputMode(output_mode),
+    )
+    out = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return out
+
+
+def _bronze(spark: SparkSession, schema: str, src: str, out: str) -> None:
+    """Bronze step of i18/i19/i20: stream the staged ``src`` files into
+    a parquet sink at ``out``, one file per micro-batch (so each staged
+    file commits as its own sink-log batch)."""
+    raw = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .format("parquet")
+        .load(src)
+    )
+    _drain(spark, raw.writeStream.format("parquet").option("path", out))
 
 
 @query(
@@ -618,18 +658,7 @@ def i11_foreach_batch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.path.join(log_dir, f"batch_id={batch_id}")
         )
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        q = (
-            s.writeStream.foreachBatch(apply_batch)
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    _drain(spark, s.writeStream.foreachBatch(apply_batch))
 
     from pyspark.sql import Window
 
@@ -919,15 +948,7 @@ def i17_stream_file_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = _stream_events(spark, sf_dir).filter(
         F.col("event_type") == "purchase"
     ).select("event_id", "user_id", "ts", "value")
-    q = (
-        s.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_i17_"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(spark, s.writeStream.format("parquet").option("path", out))
     return spark.read.parquet(out)
 
 
@@ -1086,26 +1107,7 @@ def i18_stream_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame
     _stage_bucket_files(ev, half, 2, src, "h")
 
     # 2. bronze: file stream → parquet sink, one file per micro-batch
-    raw = (
-        spark.readStream.schema(_I18_BRONZE_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .format("parquet")
-        .load(src)
-    )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        q = (
-            raw.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_i18_"))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    _bronze(spark, _I18_BRONZE_SCHEMA, src, out)
 
     # 3. silver: fold the sink log batch-by-batch (base ⊎ delta)
     cents = (finite_metric("value").cast("decimal(18,2)") * 100).cast(
@@ -1354,26 +1356,7 @@ def i19_stream_retract_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     _stage_bucket_files(staged, bucket, 2, src, "h")
 
-    raw = (
-        spark.readStream.schema(_I19_BRONZE_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .format("parquet")
-        .load(src)
-    )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        q = (
-            raw.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_i19_"))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    _bronze(spark, _I19_BRONZE_SCHEMA, src, out)
 
     batches = _sink_log_batches(out)
     acc: list = []
@@ -1644,28 +1627,9 @@ def i20_stream_sink_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     quarter = F.pmod(F.coalesce(F.col("event_id"), F.lit(0)), F.lit(4))
     _stage_bucket_files(ev, quarter, 4, src, "q")
 
-    raw = (
-        spark.readStream.schema(
-            "event_id long, user_id long, ts timestamp, value double"
-        )
-        .option("maxFilesPerTrigger", "1")
-        .format("parquet")
-        .load(src)
+    _bronze(
+        spark, "event_id long, user_id long, ts timestamp, value double", src, out
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        q = (
-            raw.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_i20_"))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
     compact_stream_sink(spark, out)
     return spark.read.parquet(out)

@@ -271,8 +271,10 @@ def test_threaded_mini_drain_mixed_ids(spark, sf_dir):
     """Regression net for thread-hazards (the BENCH_r05 class): a
     bench-phase-1-shaped drain — several client threads, mixed id
     kinds (plain SQL ops, a Python data source read, the Python sink
-    writer, a pandas-UDF id) — must complete without error. Catches
-    any future dependence on JVM thread-local session state."""
+    writer, a pandas-UDF id, streaming ids) — must complete without
+    error. Catches any future dependence on JVM thread-local session
+    state; the streaming runs must leave the caller's shuffle
+    partitions and catalog as they found them."""
     import concurrent.futures as cf
 
     import servicenow_cmdb_integration_to_aws_spark as engine
@@ -282,7 +284,9 @@ def test_threaded_mini_drain_mixed_ids(spark, sf_dir):
         "d2_agg_group", "a17_python_datasource", "b4_cmp_filter",
         "a20_python_datasource_writer", "k3_grouped_map",
         "c1_join_bcast", "a17_python_datasource", "e12_sessionize",
+        "a7_replay_stream", "i4_watermark_late",
     ]
+    before = spark.conf.get("spark.sql.shuffle.partitions")
 
     def run(qid):
         df = engine.QUERIES[qid](spark, sf_dir)
@@ -292,6 +296,10 @@ def test_threaded_mini_drain_mixed_ids(spark, sf_dir):
     with cf.ThreadPoolExecutor(4) as ex:
         done = list(ex.map(run, ids))
     assert done == ids
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+    assert not [
+        t.name for t in spark.catalog.listTables() if t.name.startswith("mem_sink_")
+    ]
 
 
 def test_heavy_hitters_output_partitioning_independent(spark):

@@ -988,11 +988,11 @@ def test_stage_batch_dirs2_take_refuses_to_overwrite(spark, tmp_path):
     same value into the same dest twice must fail loudly — only a
     cross-device link falls back to a copy, never an existing file."""
     from servicenow_cmdb_integration_to_aws_spark.streaming.compaction import (
-        _stage_batch_dirs2,
+        _stage_batch_dirs,
     )
 
     df = spark.range(6).withColumnRenamed("id", "k")
-    take, done = _stage_batch_dirs2(df, F.col("k") % 2, F.col("k") % 3)
+    take, done = _stage_batch_dirs(df, a=F.col("k") % 2, b=F.col("k") % 3)
     dest = str(tmp_path / "batch_id=0")
     try:
         take("a", 0, dest)
@@ -1004,6 +1004,52 @@ def test_stage_batch_dirs2_take_refuses_to_overwrite(spark, tmp_path):
         assert sorted(r.k for r in spark.read.parquet(dest).collect()) == [0, 2, 4]
     finally:
         done()
+
+
+def test_drain_pins_state_partitions_only_across_start(
+    spark, tmp_path, monkeypatch
+):
+    """_drain freezes 8 state partitions into the query while the
+    caller's session keeps its own shuffle.partitions during the
+    batches, and deletes its checkpoint dir afterwards."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from servicenow_cmdb_integration_to_aws_spark.streaming.stream_ops import (
+        _drain,
+    )
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    src = tmp_path / "src"
+    src.mkdir()
+    pq.write_table(
+        pa.table({"k": pa.array([i % 3 for i in range(20)], pa.int64())}),
+        str(src / "part.parquet"),
+    )
+    seen = []
+
+    def on_batch(batch_df, batch_id):
+        batch_df.collect()  # a stateful batch must be fully consumed
+        seen.append(
+            (
+                batch_df.rdd.getNumPartitions(),
+                spark.conf.get("spark.sql.shuffle.partitions"),
+            )
+        )
+
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "5")
+    try:
+        counts = (
+            spark.readStream.schema("k long").parquet(str(src))
+            .groupBy("k").count()
+        )
+        _drain(spark, counts.writeStream.outputMode("update").foreachBatch(on_batch))
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "5"
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    assert seen and all(n == 8 and caller == "5" for n, caller in seen), seen
+    assert not [p for p in os.listdir(tmp_path) if p.startswith("ckpt_")]
 
 
 @pytest.mark.parametrize(

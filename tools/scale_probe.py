@@ -70,11 +70,9 @@ def build_scaled(spark, k: int) -> str:
         ):
             shutil.copy(src, dst)
             continue
-        if t == "events":
-            # ns-timestamp parquet: read ts as raw nanos LONG and keep it
-            # long in the scaled copy so the engine's scan() path still
-            # applies its own nanos->micros conversion.
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # ns-timestamp events parquet reads ts as raw nanos LONG (the
+        # session's nanosAsLong) and stays long in the scaled copy, so
+        # the engine's scan() path still applies its own conversion.
         df = spark.read.parquet(src)
         parts = []
         for i in range(k):
