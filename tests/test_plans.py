@@ -785,3 +785,33 @@ def test_i21_consistent_join_plan_shape(spark, sf_dir):
     assert plan.count("PushedFilters: [IsNotNull(user_id)]") >= 2, plan
     assert "partial_sum" in plan and "partial_count" in plan, plan
     assert "SortMergeJoin" not in plan, plan
+
+
+#: perfbench's relational_mix ids, copied so the test does not depend on
+#: the benchmark's files
+_RELATIONAL_MIX = (
+    "d10_percentile", "d25_bitmap_distinct", "c10_join_cross", "c8_join_asof",
+    "e10_gap_islands", "b10_boolcomp", "f1_sort", "g1_union_all", "b13_exists",
+    "h14_struct_ops", "c18_scd2_intervals", "k10_sql_udf", "t11_golden_q2",
+    "t18_golden_q1", "p1_encoded_filter", "p5_dotwalk_select", "h10_json",
+    "h9_map", "i1_tumbling",
+)
+
+
+def test_warm_rerun_compiles_no_generated_code(spark, sf_dir):
+    """A warm pass reuses every generated class: with Spark's default
+    100-entry codegen cache each warm pass over these ids recompiled
+    about as many classes as the cold pass (170 of 175 at sf0.01), so
+    build_session sizes the cache to the registry."""
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "8192"
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    queries = entrymod.queries()
+
+    def run_all() -> int:
+        before = compiles.METRIC_COMPILATION_TIME().getCount()
+        for qid in _RELATIONAL_MIX:
+            queries[qid](spark, sf_dir).write.mode("overwrite").format("noop").save()
+        return compiles.METRIC_COMPILATION_TIME().getCount() - before
+
+    run_all()
+    assert run_all() == 0

@@ -4,7 +4,10 @@ capture, the guide §1 'measure first' harness.
 
 For each id: run the query REPEATS times end-to-end through the noop
 sink on one fresh session (first run = cold plan, rest warm), print
-all timings, and (with --plans DIR) write `<id>_<tag>.txt` containing
+all timings with each run's generated-code compiles and compile
+milliseconds (the Spark ``CodegenMetrics`` / ``CodeGenerator`` deltas;
+a warm run that still compiles is missing the codegen cache), and
+(with --plans DIR) write `<id>_<tag>.txt` containing
 `explain("formatted")` of the exact DataFrame the bench executes.
 
 Usage:
@@ -36,6 +39,14 @@ def main() -> int:
 
     queries = entrymod.queries()
     spark = build_session("profile-ids")
+    jvm = spark._jvm
+    compiles = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    codegen = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+
+    def compiled() -> tuple[int, int]:
+        """(classes compiled, compile nanoseconds) since the JVM started"""
+        return compiles.getCount(), codegen.compileTime()
+
     # same warmup as bench.py: JVM + codegen + parquet footer
     entrymod.entry(spark).collect()
 
@@ -43,15 +54,21 @@ def main() -> int:
         if qid not in queries:
             print(f"?? {qid}: not registered")
             continue
-        runs = []
+        runs, compiles_ms = [], []
         for r in range(args.repeats):
             spark.sparkContext.setJobDescription(f"{qid} run{r}")
+            n0, ns0 = compiled()
             t0 = time.perf_counter()
             df = queries[qid](spark, args.sf)
             df.write.mode("overwrite").format("noop").save()
             runs.append(round(time.perf_counter() - t0, 3))
+            n1, ns1 = compiled()
+            compiles_ms.append((n1 - n0, round((ns1 - ns0) / 1e6)))
         spark.sparkContext.setJobDescription(None)
-        print(f"{qid}: {runs} (min {min(runs):.3f})", flush=True)
+        print(
+            f"{qid}: {runs} (min {min(runs):.3f}) compiles/ms {compiles_ms}",
+            flush=True,
+        )
         if args.plans:
             os.makedirs(args.plans, exist_ok=True)
             df = queries[qid](spark, args.sf)
