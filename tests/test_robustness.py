@@ -1392,3 +1392,66 @@ def test_hostile_ansi_off_is_restored_by_tune(spark, sf_dir):
         finally:
             spark.conf.set("spark.sql.ansi.enabled", "true")
         assert hostile == baseline, qid
+
+
+def test_worker_rereads_zip_directory_only_when_archive_changes(spark, tmp_path):
+    """Each Python task starts with importlib.invalidate_caches(), which on
+    CPython 3.11 re-parses every zip on the worker path (~0.2 s a task).
+    The engine's worker daemon keeps a zip's cached directory until the
+    archive changes; a changed archive is still re-read and re-imported."""
+    zpath = str(tmp_path / "zmod_probe.zip")
+
+    def probe(batches):
+        import importlib
+        import os
+        import sys
+        import zipfile
+        import zipimport
+
+        import pandas as pd
+
+        for _ in batches:
+            pass
+
+        def write(value):
+            with zipfile.ZipFile(zpath + ".tmp", "w") as z:
+                z.writestr("zmod_probe.py", f"VALUE = {value}\n")
+            os.replace(zpath + ".tmp", zpath)
+
+        write(1)
+        sys.path.insert(0, zpath)
+        read = zipimport._read_directory
+        reads = []
+        try:
+            first = importlib.import_module("zmod_probe").VALUE
+            zipimport._read_directory = lambda a: reads.append(a) or read(a)
+            for _ in range(3):
+                importlib.invalidate_caches()
+            steady = len(reads)
+            write(22)
+            importlib.invalidate_caches()
+            changed = reads[steady:]
+            sys.modules.pop("zmod_probe")
+            fresh = importlib.import_module("zmod_probe").VALUE
+        finally:
+            zipimport._read_directory = read
+            sys.path.remove(zpath)
+            sys.path_importer_cache.pop(zpath, None)
+            sys.modules.pop("zmod_probe", None)
+        yield pd.DataFrame(
+            {"first": [first], "steady": [steady], "changed": [",".join(changed)], "fresh": [fresh]}
+        )
+
+    row = (
+        spark.range(1, numPartitions=1)
+        .mapInPandas(probe, "first long, steady long, changed string, fresh long")
+        .collect()[0]
+    )
+    assert row["first"] == 1
+    assert row["steady"] == 0
+    assert row["changed"] == zpath
+    assert row["fresh"] == 22
+    conf = spark.sparkContext.getConf()
+    assert conf.get("spark.python.daemon.module") == (
+        "servicenow_cmdb_integration_to_aws_spark.worker_daemon"
+    )
