@@ -5,14 +5,15 @@ from __future__ import annotations
 import os
 import sys
 
-import duckdb
 import pytest
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+sys.path.append(os.path.join(ROOT, "tools"))  # idrun, driver_order
 
+import idrun
 import servicenow_cmdb_integration_to_aws_spark as engine
 from servicenow_cmdb_integration_to_aws_spark.session import build_session
-from servicenow_cmdb_integration_to_aws_spark.sources.tables import TABLE_NAMES
 
 SF_SMALL = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 
@@ -31,12 +32,6 @@ def sf_dir() -> str:
 
 @pytest.fixture(scope="session")
 def duck():
-    con = duckdb.connect()
-    con.execute("SET TimeZone='UTC'")
-    for t in TABLE_NAMES:
-        con.execute(
-            f"CREATE OR REPLACE VIEW {t} AS "
-            f"SELECT * FROM read_parquet('{SF_SMALL}/{t}.parquet')"
-        )
+    con = idrun.duck(SF_SMALL)
     yield con
     con.close()

@@ -2,6 +2,12 @@
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+
+import pytest
+
 import __spark_entry__ as entrymod
 
 
@@ -38,6 +44,59 @@ def test_committed_driver_order_names_registered_ids_once():
     assert len(listed) == len(set(listed))
     assert set(listed) <= set(entrymod.queries())
     assert list(entrymod.queries())[-len(listed) :] == listed
+
+
+def test_committed_driver_order_is_current():
+    """The committed JSON equals the order tools/driver_order.py derives
+    now; after editing any @query body, rerun the tool and commit."""
+    import json
+
+    import driver_order as tool
+
+    assert tool.driver_order() == json.loads(tool.OUT.read_text())
+
+
+@pytest.mark.parametrize(
+    "tool",
+    ["check_parity", "check_determinism", "check_dtypes", "check_rescans", "profile_ids"],
+)
+def test_tool_rejects_unregistered_id(tool, tmp_path):
+    """A mistyped id is a usage error before any session starts: with a
+    SPARK_GRAFT_CPUS that build_session cannot parse, reaching the
+    session would exit 1, not 2."""
+    env = {**os.environ, "SPARK_GRAFT_CPUS": "no-session"}
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = os.path.join(root, "tools", f"{tool}.py")
+    proc = subprocess.run(
+        [sys.executable, script, "no_such_id"],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=120,
+    )
+    assert proc.returncode == 2, proc.stderr
+    assert "not registered: no_such_id" in proc.stderr
+
+
+def test_duck_views_read_directory_tables(sf_dir, tmp_path):
+    """idrun.duck reads a table stored as a directory of part files (two
+    parts plus one empty part, the --filesplit shape) like the file."""
+    import idrun
+    import pyarrow.parquet as pq
+
+    for t in idrun.TABLE_NAMES:
+        tbl = pq.read_table(os.path.join(sf_dir, f"{t}.parquet"))
+        d = tmp_path / f"{t}.parquet"
+        d.mkdir()
+        half = tbl.num_rows // 2
+        pq.write_table(tbl.slice(0, 0), d / "part-0.parquet")
+        pq.write_table(tbl.slice(0, half), d / "part-1.parquet")
+        pq.write_table(tbl.slice(half), d / "part-2.parquet")
+
+    def counts(con):
+        return {
+            t: con.execute(f"SELECT count(*) FROM {t}").fetchone()[0]
+            for t in idrun.TABLE_NAMES
+        }
+
+    assert counts(idrun.duck(str(tmp_path))) == counts(idrun.duck(sf_dir))
 
 
 def test_entry_flagship(spark):

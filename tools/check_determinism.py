@@ -32,21 +32,14 @@ Usage:
 from __future__ import annotations
 
 import argparse
-import sys
-import time
+import os
 
-sys.path.insert(0, ".")
-
-import __spark_entry__ as entrymod  # the exact surface the driver imports
-from servicenow_cmdb_integration_to_aws_spark.session import build_session
-
-sys.path.insert(0, "tools")
+import idrun
 from check_parity import rows_canon  # same canonicalization
 
 
 def main() -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--sf", default="/root/testdata/sf0.001")
     ap.add_argument(
         "--vs-sf", default=None,
         help="second corpus dir with identical logical content "
@@ -63,67 +56,48 @@ def main() -> int:
              "session 1, then all on session 2) to avoid a JVM "
              "restart per id.",
     )
-    ap.add_argument("ids", nargs="*")
-    args = ap.parse_args()
+    args = idrun.parse(ap, "/root/testdata/sf0.001")
+    spark, queries, _ = idrun.session("determinism")
 
-    queries = entrymod.queries()
+    def run(qid, sf_dir):
+        df = queries[qid](spark, sf_dir)
+        return rows_canon(df.columns, df.collect())
+
     ids = args.ids or sorted(queries)
-    spark = build_session("determinism")
-
     phase1: dict[str, tuple] = {}
     if args.cpus2 is not None:
         # phase-wise: collect run 1 for every id, rebuild the session
         # at the second parallelism, then run 2 compares against it
-        import os as _os
+        def run1(qid):
+            phase1[qid] = run(qid, args.sf)
+            return "run1", f"{len(phase1[qid][1])} rows"
 
-        for qid in ids:
-            t0 = time.time()
-            try:
-                df = queries[qid](spark, args.sf)
-                phase1[qid] = rows_canon(df.columns, df.collect())
-                print(f"run1 {qid} ({time.time() - t0:.1f}s)")
-            except Exception as err:  # noqa: BLE001
-                print(f"ERROR(run1) {qid}: {type(err).__name__}: {err}")
+        idrun.each(ids, run1, err="ERROR(run1)")
         spark.stop()
-        _os.environ["SPARK_GRAFT_CPUS"] = str(args.cpus2)
-        spark = build_session("determinism-cpus2")
+        os.environ["SPARK_GRAFT_CPUS"] = str(args.cpus2)
+        spark = idrun.build_session("determinism-cpus2")
 
-    n_pass = n_fail = 0
-    for qid in ids:
-        t0 = time.time()
-        try:
-            if args.cpus2 is not None:
-                if qid not in phase1:
-                    n_fail += 1  # run-1 error already printed
-                    continue
-                df = queries[qid](spark, args.vs_sf or args.sf)
-                runs = [phase1[qid], rows_canon(df.columns, df.collect())]
-            else:
-                runs = []
-                for sf_dir in (args.sf, args.vs_sf or args.sf):
-                    df = queries[qid](spark, sf_dir)
-                    cols = df.columns
-                    runs.append(rows_canon(cols, df.collect()))
-            (c1, r1), (c2, r2) = runs
-            if c1 != c2:
-                print(f"FAIL {qid}: column sets differ {c1} vs {c2}")
-                n_fail += 1
-            elif r1 != r2:
-                diffs = [a for a in r1 if a not in r2][:3]
-                print(
-                    f"FAIL {qid}: {len(r1)} vs {len(r2)} rows, multisets "
-                    f"differ; sample only-in-run1: {diffs}"
-                )
-                n_fail += 1
-            else:
-                print(
-                    f"PASS {qid} ({len(r1)} rows, {time.time() - t0:.1f}s)"
-                )
-                n_pass += 1
-        except Exception as err:  # noqa: BLE001 — report and continue
-            print(f"ERROR {qid}: {type(err).__name__}: {err}")
-            n_fail += 1
-    print(f"\n{n_pass} deterministic, {n_fail} failed")
+    def check(qid):
+        if args.cpus2 is None:
+            first = run(qid, args.sf)
+        elif qid in phase1:
+            first = phase1[qid]
+        else:
+            return "FAIL", "run 1 failed"
+        (c1, r1), (c2, r2) = first, run(qid, args.vs_sf or args.sf)
+        if c1 != c2:
+            return "FAIL", f"column sets differ {c1} vs {c2}"
+        if r1 != r2:
+            diffs = [a for a in r1 if a not in r2][:3]
+            return "FAIL", (
+                f"{len(r1)} vs {len(r2)} rows, multisets differ; "
+                f"sample only-in-run1: {diffs}"
+            )
+        return "PASS", f"{len(r1)} rows"
+
+    tally = idrun.each(ids, check, err="ERROR")
+    n_fail = tally["FAIL"] + tally["ERROR"]
+    print(f"\n{tally['PASS']} deterministic, {n_fail} failed")
     return 1 if n_fail else 0
 
 

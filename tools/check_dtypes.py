@@ -24,16 +24,9 @@ Usage:
 from __future__ import annotations
 
 import argparse
-import sys
-import time
 
-import duckdb
+import idrun
 
-sys.path.insert(0, ".")
-
-import __spark_entry__ as entrymod
-from servicenow_cmdb_integration_to_aws_spark.session import build_session
-from servicenow_cmdb_integration_to_aws_spark.sources.tables import TABLE_NAMES
 
 def kind(col) -> str:
     """Collapse a pandas column to its driver-visible value class."""
@@ -76,57 +69,36 @@ def kind(col) -> str:
 
 def main() -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--sf", default="/root/testdata/sf0.001")
     ap.add_argument("-v", action="store_true", help="print per-id ok lines")
-    ap.add_argument("ids", nargs="*")
-    args = ap.parse_args()
+    args = idrun.parse(ap, "/root/testdata/sf0.001")
+    con = idrun.duck(args.sf)
+    spark, queries, oracles = idrun.session("check-dtypes")
+    ids = [qid for qid in args.ids or sorted(oracles) if qid in oracles]
 
-    queries, oracles = entrymod.queries(), entrymod.oracle_sql()
-    ids = args.ids or sorted(oracles)
-
-    con = duckdb.connect()
-    con.execute("SET TimeZone='UTC'")
-    for t in TABLE_NAMES:
-        con.execute(
-            f"CREATE OR REPLACE VIEW {t} AS "
-            f"SELECT * FROM read_parquet('{args.sf}/{t}.parquet')"
-        )
-
-    spark = build_session("check-dtypes")
-    bad = err = 0
-    for qid in ids:
-        if qid not in oracles:
-            continue
-        t0 = time.time()
-        try:
-            spdf = queries[qid](spark, args.sf).toPandas()
-            ddf = con.execute(oracles[qid]).df()
-        except Exception as ex:  # noqa: BLE001
-            print(f"ERR  {qid}: {type(ex).__name__}: {ex}", flush=True)
-            err += 1
-            continue
+    def check(qid):
+        spdf = queries[qid](spark, args.sf).toPandas()
+        ddf = con.execute(oracles[qid]).df()
         sd = {c: kind(spdf[c]) for c in spdf.columns}
         dd = {c: kind(ddf[c]) for c in ddf.columns}
         diffs = [
-            (c, f"{sd[c]}({spdf[c].dtype})", f"{dd.get(c)}({ddf[c].dtype})")
+            f"{c}: spark={sd[c]}({spdf[c].dtype}) duckdb={dd[c]}({ddf[c].dtype})"
             for c in sorted(sd)
             if c in dd and sd[c] != dd[c]
             and "obj-empty" not in (sd[c], dd[c])
+        ] + [
+            f"{c}: spark={sd.get(c, '<missing>')} duckdb={dd.get(c, '<missing>')}"
+            for c in sorted(set(sd) ^ set(dd))
         ]
-        if set(sd) != set(dd):
-            diffs += [
-                (c, sd.get(c, "<missing>"), dd.get(c, "<missing>"))
-                for c in sorted(set(sd) ^ set(dd))
-            ]
         if diffs:
-            bad += 1
-            n = len(spdf)
-            for c, s, d in diffs:
-                print(f"DIFF {qid}.{c}: spark={s} duckdb={d} (rows={n})", flush=True)
-        elif args.v:
-            print(f"ok   {qid} ({time.time()-t0:.1f}s)", flush=True)
-    print(f"done: {bad} ids with dtype diffs, {err} errors, {len(ids)} checked")
-    return 1 if bad or err else 0
+            return "DIFF", f"{'; '.join(diffs)} (rows={len(spdf)})"
+        return "ok", "dtype kinds match" if args.v else None
+
+    tally = idrun.each(ids, check, err="ERR")
+    print(
+        f"done: {tally['DIFF']} ids with dtype diffs, {tally['ERR']} errors, "
+        f"{len(ids)} checked"
+    )
+    return 1 if tally["DIFF"] or tally["ERR"] else 0
 
 
 if __name__ == "__main__":

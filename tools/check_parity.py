@@ -15,17 +15,14 @@ import argparse
 import math
 import os
 import sys
-import time
 from datetime import date, datetime
 from decimal import Decimal
 
-import duckdb
+# perfbench/session_run.py loads this file by path: find idrun beside it
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-sys.path.insert(0, ".")
-
-import __spark_entry__ as entrymod  # the exact surface the driver imports
-from servicenow_cmdb_integration_to_aws_spark.session import build_session
-from servicenow_cmdb_integration_to_aws_spark.sources.tables import TABLE_NAMES
+import idrun
+from idrun import TABLE_NAMES  # noqa: F401 - read from here by perfbench
 
 
 def canon(v):
@@ -63,80 +60,36 @@ def rows_canon(cols, rows):
 
 
 def main() -> int:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--sf", default="/root/testdata/sf0.01")
-    ap.add_argument("ids", nargs="*")
-    args = ap.parse_args()
+    args = idrun.parse(argparse.ArgumentParser(), "/root/testdata/sf0.01")
+    con = idrun.duck(args.sf)
+    spark, queries, oracles = idrun.session("check-parity")
 
-    queries, oracles = entrymod.queries(), entrymod.oracle_sql()
-    ids = args.ids or sorted(queries)
-
-    con = duckdb.connect()
-    con.execute("SET TimeZone='UTC'")
-    for t in TABLE_NAMES:
-        # testdata tables are single files; Spark-written copies (the
-        # scale_probe dirs) are DIRECTORIES of part files — glob those
-        p = f"{args.sf}/{t}.parquet"
-        src = f"'{p}/*.parquet'" if os.path.isdir(p) else f"'{p}'"
-        con.execute(
-            f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM read_parquet({src})"
-        )
-
-    spark = build_session("check-parity")
-    passed = failed = skipped = 0
-    for qid in ids:
-        if qid not in queries:
-            print(f"?? {qid}: not registered")
-            failed += 1
-            continue
-        t0 = time.time()
-        try:
-            sdf = queries[qid](spark, args.sf)
-            s_cols = list(sdf.columns)
-            s_rows = [tuple(r) for r in sdf.collect()]
-        except Exception as ex:  # noqa: BLE001
-            print(f"FAIL {qid}: spark error: {type(ex).__name__}: {ex}")
-            failed += 1
-            continue
+    def check(qid):
+        sdf = queries[qid](spark, args.sf)
+        sc, s_can = rows_canon(sdf.columns, sdf.collect())
         if qid not in oracles:
-            print(f"SKIP {qid}: rows-only ({len(s_rows)} rows, {time.time()-t0:.1f}s)")
-            skipped += 1
-            continue
-        try:
-            cur = con.execute(oracles[qid])
-            d_cols = [d[0] for d in cur.description]
-            d_rows = cur.fetchall()
-        except Exception as ex:  # noqa: BLE001
-            print(f"FAIL {qid}: duckdb error: {type(ex).__name__}: {ex}")
-            failed += 1
-            continue
-
-        sc, s_can = rows_canon(s_cols, s_rows)
-        dc, d_can = rows_canon(d_cols, d_rows)
+            return "SKIP", f"rows-only ({len(s_can)} rows)"
+        cur = con.execute(oracles[qid])
+        dc, d_can = rows_canon([d[0] for d in cur.description], cur.fetchall())
         if sc != dc:
-            print(f"FAIL {qid}: columns spark={sc} duckdb={dc}")
-            failed += 1
-            continue
+            return "FAIL", f"columns spark={sc} duckdb={dc}"
         if len(s_can) != len(d_can):
-            print(f"FAIL {qid}: rowcount spark={len(s_can)} duckdb={len(d_can)}")
-            failed += 1
-            continue
-        if s_can != d_can:
-            ndiff = sum(1 for a, b in zip(s_can, d_can) if a != b)
-            print(f"FAIL {qid}: {ndiff}/{len(s_can)} rows differ; first:")
-            for a, b in zip(s_can, d_can):
-                if a != b:
-                    print(f"  cols : {sc}")
-                    print(f"  spark: {a}")
-                    print(f"  duck : {b}")
-                    break
-            failed += 1
-            continue
-        print(f"PASS {qid} ({len(s_can)} rows, {time.time()-t0:.1f}s)")
-        passed += 1
+            return "FAIL", f"rowcount spark={len(s_can)} duckdb={len(d_can)}"
+        diff = [(a, b) for a, b in zip(s_can, d_can) if a != b]
+        if diff:
+            a, b = diff[0]
+            return "FAIL", (
+                f"{len(diff)}/{len(s_can)} rows differ; first:\n"
+                f"  cols : {sc}\n  spark: {a}\n  duck : {b}"
+            )
+        return "PASS", f"{len(s_can)} rows"
 
-    print(f"\n{passed} passed, {failed} failed, {skipped} rows-only skipped")
-    return 1 if failed else 0
+    tally = idrun.each(args.ids or sorted(queries), check)
+    print(
+        f"\n{tally['PASS']} passed, {tally['FAIL']} failed, "
+        f"{tally['SKIP']} rows-only skipped"
+    )
+    return 1 if tally["FAIL"] else 0
 
 
 if __name__ == "__main__":

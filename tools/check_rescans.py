@@ -17,50 +17,32 @@ N-scan plan is a *decision*, not an accident.
 Usage:
     python tools/check_rescans.py [--sf DIR] [--threshold 5] [id ...]
 
-Exit code 0 always (audit, not a gate — the per-id gates live in
-tests/test_plans.py::test_multi_consumer_intermediates_materialize_once).
+Exit code 0 whatever the counts (audit, not a gate — the per-id gates
+live in tests/test_plans.py::test_multi_consumer_intermediates_materialize_once).
 """
 
 from __future__ import annotations
 
 import argparse
 import re
-import sys
-import time
 from collections import Counter
 
-sys.path.insert(0, ".")
-
-import __spark_entry__ as entrymod
-from servicenow_cmdb_integration_to_aws_spark.session import build_session
+import idrun
 
 _TABLE_RE = re.compile(r"file:[^\s\],]*?/(\w+)\.parquet")
 
 
 def main() -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--sf", default="/root/testdata/sf0.01")
     ap.add_argument("--threshold", type=int, default=5)
-    ap.add_argument("ids", nargs="*")
-    args = ap.parse_args()
-
-    queries = entrymod.queries()
-    ids = args.ids or sorted(queries)
-
-    spark = build_session("check-rescans")
+    args = idrun.parse(ap, "/root/testdata/sf0.01")
+    spark, queries, _ = idrun.session("check-rescans")
     report = []
-    for qid in ids:
-        if qid not in queries:
-            print(f"?? {qid}: not registered")
-            continue
-        t0 = time.time()
-        try:
-            df = queries[qid](spark, args.sf)
-            df.collect()
-            plan = df._jdf.queryExecution().executedPlan().toString()
-        except Exception as ex:  # noqa: BLE001
-            print(f"ERR  {qid}: {type(ex).__name__}: {ex}")
-            continue
+
+    def check(qid):
+        df = queries[qid](spark, args.sf)
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
         # AdaptiveSparkPlan's toString prints BOTH the final and the
         # initial plan once finalized; counting the initial section
         # would double every adaptive scan. Keep the final plan only.
@@ -69,13 +51,15 @@ def main() -> int:
         n_reuse = plan.count("ReusedExchange") + plan.count("ReusedQueryStage")
         tables = Counter(_TABLE_RE.findall(plan))
         tbl = ",".join(f"{t}x{c}" for t, c in tables.most_common()) or "-"
-        report.append((n_scan, n_reuse, qid, tbl, time.time() - t0))
+        report.append((n_scan, n_reuse, qid, tbl))
+        return "ok", None
 
+    idrun.each(args.ids or sorted(queries), check, err="ERR")
     report.sort(reverse=True)
     print(f"\n{'scans':>5} {'reuse':>5}  {'id':<28} per-table")
-    for n_scan, n_reuse, qid, tbl, dt in report:
+    for n_scan, n_reuse, qid, tbl in report:
         flag = " <-- AUDIT" if n_scan >= args.threshold else ""
-        print(f"{n_scan:>5} {n_reuse:>5}  {qid:<28} {tbl} ({dt:.1f}s){flag}")
+        print(f"{n_scan:>5} {n_reuse:>5}  {qid:<28} {tbl}{flag}")
     flagged = [r for r in report if r[0] >= args.threshold]
     print(
         f"\n{len(report)} ids audited, {len(flagged)} at/above "

@@ -9,15 +9,10 @@ from __future__ import annotations
 
 import argparse
 import json
-import sys
 import time
 
-import duckdb
-
-sys.path.insert(0, ".")
-
-import __spark_entry__ as entrymod
-from servicenow_cmdb_integration_to_aws_spark.sources.tables import TABLE_NAMES
+import idrun
+from idrun import entrymod
 
 
 def main() -> None:
@@ -25,13 +20,7 @@ def main() -> None:
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
     args = ap.parse_args()
 
-    con = duckdb.connect()
-    con.execute("SET TimeZone='UTC'")
-    for t in TABLE_NAMES:
-        con.execute(
-            f"CREATE OR REPLACE VIEW {t} AS "
-            f"SELECT * FROM read_parquet('{args.sf}/{t}.parquet')"
-        )
+    con = idrun.duck(args.sf)
     oracles = entrymod.oracle_sql()
     times: dict[str, float] = {}
     for qid in sorted(oracles):

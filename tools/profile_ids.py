@@ -25,24 +25,18 @@ import os
 import sys
 import time
 
-sys.path.insert(0, ".")
-
-import __spark_entry__ as entrymod
+import idrun
+from idrun import entrymod
 from perfbench import measure
-from servicenow_cmdb_integration_to_aws_spark.session import build_session
 
 
 def main() -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--sf", default="/root/testdata/sf0.1")
     ap.add_argument("--repeats", type=int, default=3)
     ap.add_argument("--plans", default=None)
     ap.add_argument("--tag", default="before")
-    ap.add_argument("ids", nargs="+")
-    args = ap.parse_args()
-
-    queries = entrymod.queries()
-    spark = build_session("profile-ids")
+    args = idrun.parse(ap, "/root/testdata/sf0.1", nargs="+")
+    spark, queries, _ = idrun.session("profile-ids")
     jvm = spark._jvm
     compiles = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
     codegen = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
@@ -58,10 +52,7 @@ def main() -> int:
     # same warmup as bench.py: JVM + codegen + parquet footer
     entrymod.entry(spark).collect()
 
-    for qid in args.ids:
-        if qid not in queries:
-            print(f"?? {qid}: not registered")
-            continue
+    def check(qid):
         runs, compiles_ms, worker_s = [], [], []
         for r in range(args.repeats):
             spark.sparkContext.setJobDescription(f"{qid} run{r}")
@@ -75,11 +66,6 @@ def main() -> int:
             compiles_ms.append((n1 - n0, round((ns1 - ns0) / 1e6)))
             worker_s.append(round(worker_cpu_s() - w0, 2))
         spark.sparkContext.setJobDescription(None)
-        print(
-            f"{qid}: {runs} (min {min(runs):.3f}) compiles/ms {compiles_ms}"
-            f" pyworker cpu s {worker_s}",
-            flush=True,
-        )
         if args.plans:
             os.makedirs(args.plans, exist_ok=True)
             df = queries[qid](spark, args.sf)
@@ -90,7 +76,13 @@ def main() -> int:
                 os.path.join(args.plans, f"{qid}_{args.tag}.txt"), "w"
             ) as fh:
                 fh.write(plan)
-    return 0
+        return "ok", (
+            f"{runs} (min {min(runs):.3f}) compiles/ms {compiles_ms}"
+            f" pyworker cpu s {worker_s}"
+        )
+
+    tally = idrun.each(args.ids, check, err="ERR")
+    return 1 if tally["ERR"] else 0
 
 
 if __name__ == "__main__":
