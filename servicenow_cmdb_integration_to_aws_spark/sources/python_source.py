@@ -30,6 +30,7 @@ from pyspark.sql.datasource import (
 
 from ..registry import query
 from ..sources.tables import path_of, scan
+from ..statefile import publish, read_json
 
 PAGE_KEYS = 2_000  # orderkey span per page/partition
 
@@ -384,13 +385,7 @@ def read_committed(spark: SparkSession, path: str, schema: str) -> DataFrame:
     or the complete new manifest; files renamed into `committed/`
     before a mid-commit crash are orphans no reader ever lists —
     the same reader discipline as i17's `_spark_metadata` log."""
-    import json
-
-    mpath = os.path.join(path, "_MANIFEST")
-    if not os.path.exists(mpath):
-        return spark.createDataFrame([], schema)
-    with open(mpath) as f:
-        manifest = json.load(f)
+    manifest = read_json(os.path.join(path, "_MANIFEST"), {})
     files = [
         os.path.join(path, "committed", name)
         for name in manifest.get("files", [])
@@ -489,7 +484,7 @@ class OrdersUpsertWriter(DataSourceArrowWriter):
     def commit(self, messages):
         # Crash-safe at every step (r9 fault-injection hardening): the
         # manifest is the COMMIT RECORD — it lists the committed file
-        # names and is published by atomic os.replace, and readers
+        # names and is published by statefile.publish, and readers
         # (read_committed) resolve it before touching any file. Die
         # before the replace → orphaned renames that no reader lists;
         # die after → the write is durable and complete. A full-job
@@ -497,7 +492,6 @@ class OrdersUpsertWriter(DataSourceArrowWriter):
         # manifest, so the reader sees exactly one copy either way.
         import json
         import os
-        import tempfile
 
         self._fault("commit_start")  # all tasks staged, nothing committed
         final = os.path.join(self.path, "committed")
@@ -510,17 +504,12 @@ class OrdersUpsertWriter(DataSourceArrowWriter):
             total += m.n_rows
             self._fault("after_rename")  # mid-commit: some files moved
         self._fault("before_manifest")  # all moved, commit record not yet out
-        fd, tmp = tempfile.mkstemp(dir=self.path)
-        with os.fdopen(fd, "w") as f:
-            json.dump(
-                {
-                    "n_rows": total,
-                    "n_files": len(names),
-                    "files": sorted(names),
-                },
-                f,
-            )
-        os.replace(tmp, os.path.join(self.path, "_MANIFEST"))  # atomic
+        publish(
+            os.path.join(self.path, "_MANIFEST"),
+            json.dumps(
+                {"n_rows": total, "n_files": len(names), "files": sorted(names)}
+            ),
+        )
         self._fault("after_manifest")  # durable; retry must stay exactly-once
 
     def abort(self, messages):
@@ -570,8 +559,6 @@ def a20_python_datasource_writer(spark: SparkSession, sf_dir: str) -> DataFrame:
     messages (file names + counts, not data). The rename-on-commit
     discipline is what makes speculative/retried tasks safe — the
     same protocol Spark's own FileOutputCommitter v1 uses."""
-    import json
-    import os
     import tempfile
 
     register_sink(spark)
@@ -588,9 +575,10 @@ def a20_python_datasource_writer(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     o.write.format("cmdb_upsert").option("path", out).mode("append").save()
-    with open(os.path.join(out, "_MANIFEST")) as f:
-        manifest = json.load(f)
-    assert manifest["n_rows"] >= 0  # manifest written even for an empty export
+    # commit() writes the manifest even for an empty export, so a
+    # missing one is a failed commit, not an empty result
+    if not os.path.exists(os.path.join(out, "_MANIFEST")):
+        raise RuntimeError(f"a20: export {out} committed no _MANIFEST")
     # manifest-gated read-back (r9): only files the commit record lists
     return read_committed(
         spark, out, "o_orderkey long, o_orderstatus string, o_totalprice double"

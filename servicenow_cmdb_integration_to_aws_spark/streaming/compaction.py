@@ -26,6 +26,7 @@ compactors serialize, concurrent readers never block.
 
 from __future__ import annotations
 
+import contextlib
 import errno
 import json
 import os
@@ -37,6 +38,7 @@ from pyspark.sql import functions as F
 from ..operators.numeric import FIN
 from ..registry import EVENTS_US, query
 from ..sources.tables import scan
+from ..statefile import exclusive, publish, read_json
 
 
 def _require(ok: bool, what: str) -> None:
@@ -176,22 +178,22 @@ class SnapshotStore:
 
     # -- commit metadata ------------------------------------------------
     def _meta(self) -> dict:
-        p = os.path.join(self.root, "_LATEST")
-        if not os.path.exists(p):
-            return {"version": 0, "compacted_through": -1}
-        with open(p) as f:
-            return json.load(f)
+        return read_json(
+            os.path.join(self.root, "_LATEST"),
+            {"version": 0, "compacted_through": -1},
+        )
 
     def _crash(self, point: str) -> None:
         if self._fault is not None:
             self._fault(point)
 
     def _commit(self, meta: dict) -> None:
-        fd, tmp = tempfile.mkstemp(dir=self.root)
-        with os.fdopen(fd, "w") as f:
-            json.dump(meta, f)
-        self._crash("before_latest_replace")  # tmp written, not live
-        os.replace(tmp, os.path.join(self.root, "_LATEST"))  # atomic
+        publish(
+            os.path.join(self.root, "_LATEST"),
+            json.dumps(meta),
+            # tmp written, not live
+            staged=lambda: self._crash("before_latest_replace"),
+        )
         self._crash("after_latest_replace")  # commit durable
 
     # -- the fold -------------------------------------------------------
@@ -230,20 +232,7 @@ class SnapshotStore:
         """Exclusive flock over the store: two compactors racing would
         both write vN+1 with different subsets and one commit would
         vanish. Readers are unaffected (they pin a version)."""
-        import contextlib
-
-        @contextlib.contextmanager
-        def cm():
-            with open(os.path.join(self.root, "_LOCK"), "w") as lf:
-                try:
-                    import fcntl
-
-                    fcntl.flock(lf, fcntl.LOCK_EX)
-                except ImportError:  # non-POSIX: single-compactor assumed
-                    pass
-                yield
-
-        return cm()
+        return exclusive(os.path.join(self.root, "_LOCK"))
 
     def _advance(
         self, spark: SparkSession, meta: dict, folded: DataFrame, through: int
@@ -994,12 +983,9 @@ class StoreGroup:
         return os.path.join(self.root, "_MANIFEST")
 
     def manifest(self) -> dict:
-        p = self._manifest_path()
-        if not os.path.exists(p):
-            return {}
-        with open(p) as f:
-            return json.load(f)
+        return read_json(self._manifest_path(), {})
 
+    @contextlib.contextmanager
     def commit(self):
         """Context manager: flock the group, let the caller run folds,
         then publish the member versions as one manifest. Nothing is
@@ -1014,38 +1000,21 @@ class StoreGroup:
         group, so a concurrent caller invoking :meth:`compact` on the
         group object can never leak its fold into another thread's
         in-flight manifest."""
-        import contextlib
-
-        @contextlib.contextmanager
-        def cm():
-            with open(os.path.join(self.root, "_GLOCK"), "w") as lf:
-                try:
-                    import fcntl
-
-                    fcntl.flock(lf, fcntl.LOCK_EX)
-                except ImportError:  # non-POSIX: single maintainer
-                    pass
-                handle = _GroupCommit(self)
-                yield handle
-                versions = {
-                    name: handle.recorded.get(name, s._meta()["version"])
-                    for name, s in self.stores.items()
-                }
-                empty = sorted(n for n, v in versions.items() if v == 0)
-                if empty:
-                    # fail at COMMIT time, not at some later reader's
-                    # plan time: a v=0 member has no version dir to pin
-                    raise ValueError(
-                        f"group commit with never-compacted members: {empty}"
-                    )
-                fd, tmp = tempfile.mkstemp(dir=self.root)
-                with os.fdopen(fd, "w") as f:
-                    json.dump(versions, f)
-                    f.flush()
-                    os.fsync(f.fileno())
-                os.replace(tmp, self._manifest_path())  # atomic
-
-        return cm()
+        with exclusive(os.path.join(self.root, "_GLOCK")):
+            handle = _GroupCommit(self)
+            yield handle
+            versions = {
+                name: handle.recorded.get(name, s._meta()["version"])
+                for name, s in self.stores.items()
+            }
+            empty = sorted(n for n, v in versions.items() if v == 0)
+            if empty:
+                # fail at COMMIT time, not at some later reader's
+                # plan time: a v=0 member has no version dir to pin
+                raise ValueError(
+                    f"group commit with never-compacted members: {empty}"
+                )
+            publish(self._manifest_path(), json.dumps(versions))
 
     def compact(self, name: str, spark: SparkSession, log_dir: str) -> int:
         """Plain pass-through to a member's compact — NEVER records
@@ -1078,13 +1047,7 @@ class StoreGroup:
             raise ValueError(f"keep_last must be >= 1, got {keep_last}")
         import shutil
 
-        with open(os.path.join(self.root, "_GLOCK"), "w") as lf:
-            try:
-                import fcntl
-
-                fcntl.flock(lf, fcntl.LOCK_EX)
-            except ImportError:  # non-POSIX: single maintainer
-                pass
+        with exclusive(os.path.join(self.root, "_GLOCK")):
             pins = self.manifest()
             swept: dict[str, list[int]] = {}
             for name, store in self.stores.items():

@@ -14,12 +14,12 @@ rename-commit here mirrors that pattern.
 from __future__ import annotations
 
 import json
-import os
-import tempfile
 from datetime import datetime
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..statefile import exclusive, publish, read_json
 
 ISO = "%Y-%m-%dT%H:%M:%S.%f"
 
@@ -31,11 +31,7 @@ class WatermarkStore:
         self.path = path
 
     def read(self, name: str, default: datetime) -> datetime:
-        if not os.path.exists(self.path):
-            return default
-        with open(self.path) as f:
-            state = json.load(f)
-        raw = state.get(name)
+        raw = read_json(self.path, {}).get(name)
         return datetime.strptime(raw, ISO) if raw else default
 
     def write(self, name: str, wm: datetime) -> None:
@@ -44,23 +40,10 @@ class WatermarkStore:
         (the rename alone is atomic but not isolated). On S3-backed
         deployments, where flock doesn't exist, the equivalent is
         one state object per stream name or a conditional put."""
-        lock_path = self.path + ".lock"
-        with open(lock_path, "w") as lf:
-            try:
-                import fcntl
-
-                fcntl.flock(lf, fcntl.LOCK_EX)
-            except ImportError:  # non-POSIX: single-writer assumed
-                pass
-            state = {}
-            if os.path.exists(self.path):
-                with open(self.path) as f:
-                    state = json.load(f)
+        with exclusive(self.path + ".lock"):
+            state = read_json(self.path, {})
             state[name] = wm.strftime(ISO)
-            fd, tmp = tempfile.mkstemp(dir=os.path.dirname(self.path) or ".")
-            with os.fdopen(fd, "w") as f:
-                json.dump(state, f)
-            os.replace(tmp, self.path)  # atomic commit
+            publish(self.path, json.dumps(state))
 
 
 def sync_increment(

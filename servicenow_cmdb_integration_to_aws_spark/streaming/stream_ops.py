@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import itertools
 import os
+import re
 import shutil
 import tempfile
 import threading
@@ -33,6 +34,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from ..operators.numeric import FIN, METRIC_BOUND
 from ..registry import EVENTS_US, query
 from ..sources.tables import path_of
+from ..statefile import exclusive, publish
 
 _COUNTER = itertools.count()
 
@@ -952,6 +954,37 @@ def i17_stream_file_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(out)
 
 
+def _sink_log_entry_paths(fp: str) -> list:
+    """All data-file paths referenced by ONE sink-log entry file
+    (delete actions skipped): the parse behind `_sink_log_batches` and
+    the compactor's superseded-file sweep."""
+    import json as _json
+    from urllib.parse import unquote, urlparse
+
+    with open(fp) as fh:
+        lines = [ln for ln in fh.read().splitlines() if ln.strip()]
+    # line 0 is the sink-log version header; fail LOUDLY on a
+    # missing/unknown one instead of silently skipping what might
+    # be the first data entry of a format we don't understand
+    # (r9 verdict observation).
+    if not lines or lines[0] != "v1":
+        raise ValueError(
+            f"unsupported sink-log entry {fp}: expected 'v1' header, "
+            f"got {lines[0]!r}" if lines
+            else f"empty sink-log entry {fp}"
+        )
+    out = []
+    for line in lines[1:]:
+        entry = _json.loads(line)
+        if entry.get("action") == "delete":
+            continue  # retention cleanup records, not data
+        p = entry["path"]
+        if p.startswith("file:"):
+            p = unquote(urlparse(p).path)
+        out.append(p)
+    return out
+
+
 def _sink_log_batches(out: str) -> dict:
     """Parse a parquet streaming sink's `_spark_metadata` transaction
     log into {batch_id: [committed file paths]} — the log IS the
@@ -966,33 +999,6 @@ def _sink_log_batches(out: str) -> dict:
     plain entries AFTER it count as deltas; plain entries ≤ N are
     superseded and skipped (double-counting a file that also appears
     in the compact would double its rows in the rollup)."""
-    import json as _json
-    from urllib.parse import unquote, urlparse
-
-    def _paths(fp: str) -> list:
-        with open(fp) as fh:
-            lines = [ln for ln in fh.read().splitlines() if ln.strip()]
-        # line 0 is the sink-log version header; fail LOUDLY on a
-        # missing/unknown one instead of silently skipping what might
-        # be the first data entry of a format we don't understand
-        # (r9 verdict observation).
-        if not lines or lines[0] != "v1":
-            raise ValueError(
-                f"unsupported sink-log entry {fp}: expected 'v1' header, "
-                f"got {lines[0]!r}" if lines
-                else f"empty sink-log entry {fp}"
-            )
-        out_paths = []
-        for line in lines[1:]:
-            entry = _json.loads(line)
-            if entry.get("action") == "delete":
-                continue  # retention cleanup records, not data
-            p = entry["path"]
-            if p.startswith("file:"):
-                p = unquote(urlparse(p).path)
-            out_paths.append(p)
-        return out_paths
-
     meta = os.path.join(out, "_spark_metadata")
     batches: dict = {}
     if not os.path.isdir(meta):
@@ -1005,14 +1011,16 @@ def _sink_log_batches(out: str) -> dict:
     )
     base = compacts[-1] if compacts else None
     if base is not None:
-        batches[base] = _paths(os.path.join(meta, f"{base}.compact"))
+        batches[base] = _sink_log_entry_paths(
+            os.path.join(meta, f"{base}.compact")
+        )
     for f in names:
         if not f.isdigit():
             continue  # .compact / .crc / temp files
         bid = int(f)
         if base is not None and bid <= base:
             continue  # superseded by the compact
-        batches[bid] = _paths(os.path.join(meta, f))
+        batches[bid] = _sink_log_entry_paths(os.path.join(meta, f))
     return batches
 
 
@@ -1380,54 +1388,6 @@ def i19_stream_retract_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SINK_COMPACT_TARGET = 256 * 1024  # a19's local target; 128-512 MB at scale
 
 
-def _sink_log_entry_paths(fp: str) -> list:
-    """All data-file paths referenced by ONE sink-log entry file
-    (header-validated, delete actions skipped) — the same parse as
-    _sink_log_batches' inner reader, exposed for the compactor's
-    superseded-file sweep."""
-    import json as _json
-    from urllib.parse import unquote, urlparse
-
-    with open(fp) as fh:
-        lines = [ln for ln in fh.read().splitlines() if ln.strip()]
-    if not lines or lines[0] != "v1":
-        raise ValueError(f"unsupported sink-log entry {fp}")
-    out = []
-    for line in lines[1:]:
-        entry = _json.loads(line)
-        if entry.get("action") == "delete":
-            continue
-        p = entry["path"]
-        if p.startswith("file:"):
-            p = unquote(urlparse(p).path)
-        out.append(p)
-    return out
-
-
-def _sink_compact_lock(out: str):
-    """Exclusive flock over a streaming sink dir's maintenance — two
-    compactors racing would both rewrite the committed set and publish
-    conflicting `.compact` entries (the SnapshotStore._locked pattern;
-    a real object store uses a conditional put on the log entry).
-    Readers never block: they resolve whatever log state is committed."""
-    import contextlib
-
-    @contextlib.contextmanager
-    def cm():
-        meta = os.path.join(out, "_spark_metadata")
-        os.makedirs(meta, exist_ok=True)
-        with open(os.path.join(meta, "_COMPACT_LOCK"), "w") as lf:
-            try:
-                import fcntl
-
-                fcntl.flock(lf, fcntl.LOCK_EX)
-            except ImportError:  # non-POSIX: single-compactor assumed
-                pass
-            yield
-
-    return cm()
-
-
 def compact_stream_sink(
     spark: SparkSession,
     out: str,
@@ -1446,7 +1406,10 @@ def compact_stream_sink(
     Protocol (every step crash-safe; `fault` is the kill-at-every-step
     hook, same shape as SnapshotStore._fault):
 
-    1. Under the flock, snapshot the COMMITTED set from the log (never
+    1. Under an exclusive flock on `_spark_metadata/_COMPACT_LOCK` (two
+       compactors racing would both rewrite the committed set and
+       publish conflicting `.compact` entries; readers never block),
+       snapshot the COMMITTED set from the log (never
        the directory listing — uncommitted in-flight files from a live
        writer must survive untouched).
     2. Rewrite those bytes into ceil(bytes/target) files via
@@ -1456,14 +1419,15 @@ def compact_stream_sink(
        A crash here leaves unreferenced data files; readers (which
        honor the log) never see them, and the next run sweeps them.
     3. Commit `_spark_metadata/<latest>.compact` — the FULL committed
-       file list through <latest> — by temp-write + fsync + atomic
-       rename: a concurrent log reader sees either the old state or
-       the new one, never a torn entry. Plain entries ≤ latest are now
-       superseded (kept, like Spark's own sink, until retention).
+       file list through <latest> — with `statefile.publish`
+       (temp-write + fsync + atomic rename): a concurrent log reader
+       sees either the old state or the new one, never a torn entry.
+       Plain entries ≤ latest are now superseded (kept, like Spark's
+       own sink, until retention).
     4. Sweep data files that are referenced only by superseded plain
-       entries, plus orphaned `part-compact-*` files from crashed
-       publishes. A crash mid-sweep leaves ignored orphans; re-running
-       converges.
+       entries, plus orphaned `part-compact-*` files and hidden
+       `.<N>.compact.*.tmp` records from crashed runs. A crash
+       mid-sweep leaves ignored orphans; re-running converges.
 
     Returns the batch id the compact absorbed (-1: empty log).
     Idempotent: a re-run on an already-compacted dir only sweeps.
@@ -1484,8 +1448,9 @@ def compact_stream_sink(
         if fault is not None:
             fault(point)
 
-    with _sink_compact_lock(out):
-        meta = os.path.join(out, "_spark_metadata")
+    meta = os.path.join(out, "_spark_metadata")
+    os.makedirs(meta, exist_ok=True)
+    with exclusive(os.path.join(meta, "_COMPACT_LOCK")):
         batches = _sink_log_batches(out)
         if not batches:
             return -1
@@ -1501,6 +1466,13 @@ def compact_stream_sink(
             # superseded: referenced by a plain entry ≤ latest (or an
             # older compact) but absent from the committed view
             for f in os.listdir(meta):
+                # a crashed step 3's temp record (this publish's or the
+                # older fixed `.<N>.compact.tmp` name): never an entry
+                tmp = re.fullmatch(r"\.(\d+)\.compact(\.\w+)?\.tmp", f)
+                if tmp and int(tmp[1]) <= latest:
+                    with suppress(FileNotFoundError):
+                        os.remove(os.path.join(meta, f))
+                    continue
                 is_plain = f.isdigit() and int(f) <= latest
                 is_old_compact = (
                     f.endswith(".compact")
@@ -1569,13 +1541,11 @@ def compact_stream_sink(
                     separators=(",", ":"),
                 )
             )
-        tmpf = os.path.join(meta, f".{latest}.compact.tmp")
-        with open(tmpf, "w") as fh:
-            fh.write("\n".join(lines) + "\n")
-            fh.flush()
-            os.fsync(fh.fileno())
-        _crash("before_log_commit")
-        os.replace(tmpf, os.path.join(meta, f"{latest}.compact"))
+        publish(
+            os.path.join(meta, f"{latest}.compact"),
+            "\n".join(lines) + "\n",
+            staged=lambda: _crash("before_log_commit"),
+        )
         _crash("after_log_commit")
 
         # step 4: sweep superseded + orphans

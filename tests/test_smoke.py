@@ -56,6 +56,41 @@ def test_committed_driver_order_is_current():
     assert tool.driver_order() == json.loads(tool.OUT.read_text())
 
 
+def test_state_file_jobs_live_in_statefile_only():
+    """Locks and durable publishes have one home, `statefile.py`: no
+    other package module imports fcntl or calls os.fsync or
+    tempfile.mkstemp."""
+    import ast
+    import pathlib
+
+    import servicenow_cmdb_integration_to_aws_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    offenders = []
+    for path in sorted(root.rglob("*.py")):
+        if path.name == "statefile.py" and path.parent == root:
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Import):
+                bad = any(a.name == "fcntl" for a in node.names)
+            elif isinstance(node, ast.ImportFrom):
+                bad = node.module == "fcntl" or (
+                    node.module in ("os", "tempfile")
+                    and any(a.name in ("fsync", "mkstemp") for a in node.names)
+                )
+            elif isinstance(node, ast.Attribute):
+                bad = (
+                    isinstance(node.value, ast.Name)
+                    and (node.value.id, node.attr)
+                    in (("os", "fsync"), ("tempfile", "mkstemp"))
+                )
+            else:
+                continue
+            if bad:
+                offenders.append(f"{path.relative_to(root)}:{node.lineno}")
+    assert not offenders, offenders
+
+
 @pytest.mark.parametrize(
     "tool",
     ["check_parity", "check_determinism", "check_dtypes", "check_rescans", "profile_ids"],

@@ -1414,6 +1414,8 @@ def test_stream_sink_compact_crash_at_every_step(spark, point, nth):
     assert _sink_rows(spark, out) == expected
     assert set(_sink_log_batches(out)) == {2}
     assert not _glob.glob(os.path.join(out, ".compact_tmp_*"))
+    meta = os.listdir(os.path.join(out, "_spark_metadata"))
+    assert not [f for f in meta if f.startswith("tmp") or f.endswith(".tmp")]
 
 
 def test_stream_sink_compact_rewrite_plan_has_no_shuffle(spark):
@@ -2384,3 +2386,121 @@ def test_store_group_gc_honors_manifest_pins(spark):
     assert group.read_pinned(spark)["b"].count() == 2
     with pytest.raises(ValueError, match="keep_last"):
         group.gc(keep_last=0)
+
+
+def _publish_store_latest(tmp_path, spark):
+    from servicenow_cmdb_integration_to_aws_spark.streaming.compaction import (
+        SnapshotStore,
+    )
+
+    store = SnapshotStore(str(tmp_path), key="user_id", order=["ts"])
+    return (
+        lambda: store._commit({"version": 1, "compacted_through": 0}),
+        tmp_path / "_LATEST",
+    )
+
+
+def _publish_group_manifest(tmp_path, spark):
+    from servicenow_cmdb_integration_to_aws_spark.streaming.compaction import (
+        SnapshotStore,
+        StoreGroup,
+    )
+
+    stores = {
+        n: SnapshotStore(str(tmp_path / n), key="user_id", order=["ts"])
+        for n in ("a", "b")
+    }
+    for s in stores.values():
+        s._commit({"version": 1, "compacted_through": 0})
+    group = StoreGroup(str(tmp_path / "group"), stores)
+
+    def run():
+        with group.commit():
+            pass
+
+    return run, tmp_path / "group" / "_MANIFEST"
+
+
+def _publish_watermark(tmp_path, spark):
+    import datetime
+
+    from servicenow_cmdb_integration_to_aws_spark.streaming.incremental import (
+        WatermarkStore,
+    )
+
+    store = WatermarkStore(str(tmp_path / "wm.json"))
+    return (
+        lambda: store.write("cmdb_ci", datetime.datetime(2024, 1, 1)),
+        tmp_path / "wm.json",
+    )
+
+
+def _publish_sink_compact(tmp_path, spark):
+    from servicenow_cmdb_integration_to_aws_spark.streaming.stream_ops import (
+        compact_stream_sink,
+    )
+
+    out, _ = _mk_fragmented_sink(spark, n_batches=3)
+    return (
+        lambda: compact_stream_sink(spark, out),
+        os.path.join(out, "_spark_metadata", "2.compact"),
+    )
+
+
+def _publish_upsert_manifest(tmp_path, spark):
+    from servicenow_cmdb_integration_to_aws_spark.sources.python_source import (
+        OrdersUpsertWriter,
+        _UpsertCommit,
+    )
+
+    (tmp_path / "_staging").mkdir()
+    staged = tmp_path / "_staging" / "part-0.csv"
+    staged.write_text("1,O,1.5\n")
+    writer = OrdersUpsertWriter({"path": str(tmp_path)})
+    return (
+        lambda: writer.commit([_UpsertCommit(str(staged), 1)]),
+        tmp_path / "_MANIFEST",
+    )
+
+
+@pytest.mark.parametrize(
+    "make",
+    [
+        _publish_store_latest,
+        _publish_group_manifest,
+        _publish_watermark,
+        _publish_sink_compact,
+        _publish_upsert_manifest,
+    ],
+    ids=["store_latest", "group_manifest", "watermark", "sink_compact", "a20"],
+)
+def test_commit_record_is_fsynced_before_rename(
+    spark, tmp_path, monkeypatch, make
+):
+    """Every commit record is durable before it is live: the temp file
+    renamed over the record was fsync'd first, so a power loss after
+    the rename cannot publish an empty or torn record."""
+    run, record = make(tmp_path, spark)
+    events = []
+    real_fsync, real_replace = os.fsync, os.replace
+
+    def fsync(fd):
+        events.append(("fsync", os.fstat(fd).st_ino))
+        real_fsync(fd)
+
+    def replace(src, dst, *args, **kwargs):
+        events.append(("replace", os.stat(src).st_ino, os.fspath(dst)))
+        real_replace(src, dst, *args, **kwargs)
+
+    monkeypatch.setattr(os, "fsync", fsync)
+    monkeypatch.setattr(os, "replace", replace)
+    run()
+    monkeypatch.undo()
+
+    at = [
+        i
+        for i, e in enumerate(events)
+        if e[0] == "replace" and e[2] == str(record)
+    ]
+    assert len(at) == 1, events
+    assert ("fsync", events[at[0]][1]) in events[: at[0]], events
