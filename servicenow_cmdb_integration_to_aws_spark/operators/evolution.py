@@ -25,6 +25,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import scratch
 from ..registry import query
 from ..sources.tables import SCHEMAS, scan, scan_evolving
 
@@ -37,7 +38,9 @@ def _drifted_supplier_path(spark: SparkSession, sf_dir: str) -> str:
     the evolved scan has an exact SQL oracle over the original table."""
     key = sf_dir.rstrip("/")
     if key not in _DRIFT_CACHE:
-        out = os.path.join(tempfile.mkdtemp(prefix="a10_drift_"), "supplier.parquet")
+        # a process cache: under the root, outside any scope
+        d = tempfile.mkdtemp(prefix="a10_drift_", dir=scratch.root())
+        out = os.path.join(d, "supplier.parquet")
         (
             scan(spark, sf_dir, "supplier")
             .select(
@@ -132,10 +135,8 @@ def a26_mergeschema_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     first merge instead of re-merging per query); row decoding is
     unchanged, missing columns materialize as nulls at scan time with
     zero I/O."""
-    import tempfile
-
     o = scan(spark, sf_dir, "orders")
-    land = tempfile.mkdtemp(prefix="a26_land_")
+    land = scratch.mkdtemp("a26_land_")
     v1 = o.filter(F.col("o_orderkey") % 2 == 1).select(
         "o_orderkey", "o_orderstatus"
     )

@@ -284,11 +284,11 @@ def a23_corrupt_tolerant_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     import glob
     import os
     import shutil
-    import tempfile
 
+    from .. import scratch
     from ..sources.tables import SCHEMAS, path_of
 
-    d = tempfile.mkdtemp(prefix="a23_landing_")
+    d = scratch.mkdtemp("a23_landing_")
     src = path_of(sf_dir, "orders")
     # single-file (testdata) or directory-of-part-files (every
     # Spark-written table) — land the healthy files either way
@@ -333,7 +333,7 @@ def a24_permissive_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     coordination); the quarantine column rides the normal lineage so
     the bad-feed alarm is a plain aggregate (a21's observe) instead
     of a log-scrape."""
-    import tempfile
+    from .. import scratch
 
     d = scan(spark, sf_dir, "documents")
     line = F.when(
@@ -341,7 +341,7 @@ def a24_permissive_json(spark: SparkSession, sf_dir: str) -> DataFrame:
         # truncated payload: unterminated JSON — parse must fail
         F.concat(F.lit('{"doc_id": '), F.col("doc_id").cast("string"), F.lit(', "lang": ')),
     ).otherwise(F.to_json(F.struct("doc_id", "lang")))
-    feed = tempfile.mkdtemp(prefix="a24_feed_")
+    feed = scratch.mkdtemp("a24_feed_")
     d.select(line.alias("value")).write.mode("overwrite").text(feed)
     parsed = (
         spark.read.schema("doc_id long, lang string, _corrupt string")

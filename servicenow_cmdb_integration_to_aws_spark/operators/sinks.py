@@ -15,10 +15,9 @@ only — never intermediate storage at scale (no pushdown, no stats).
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 
+from .. import scratch
 from ..registry import query
 from ..sources.tables import SCHEMAS, scan
 
@@ -32,7 +31,7 @@ def a5_sink_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     status, read back (partition pruning now applies to the layout).
     Round trip must be lossless — the oracle is the source table."""
     o = scan(spark, sf_dir, "orders")
-    out = tempfile.mkdtemp(prefix="sink_a5_")
+    out = scratch.mkdtemp("sink_a5_")
     o.write.mode("overwrite").partitionBy("o_orderstatus").parquet(out)
     # Explicit schema on the read-back: schema inference needs ≥1 data
     # file, so an empty source (legitimate for a status partition that
@@ -52,8 +51,8 @@ def a6_sink_csv_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     CSV back with the declared schema (header on; JSON written for the
     side-effect check). Lossless round trip ≡ source table."""
     c = scan(spark, sf_dir, "customer")
-    csv_dir = tempfile.mkdtemp(prefix="sink_a6_csv_")
-    json_dir = tempfile.mkdtemp(prefix="sink_a6_json_")
+    csv_dir = scratch.mkdtemp("sink_a6_csv_")
+    json_dir = scratch.mkdtemp("sink_a6_json_")
     c.write.mode("overwrite").option("header", True).csv(csv_dir)
     c.write.mode("overwrite").json(json_dir)
     return spark.read.schema(SCHEMAS["customer"]).option("header", True).csv(csv_dir)
@@ -79,7 +78,7 @@ def b15_dynamic_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     status partition and scanning the table; tests/test_plans.py
     asserts `dynamicpruning` appears in the fact scan."""
     o = scan(spark, sf_dir, "orders")
-    out = tempfile.mkdtemp(prefix="sink_b15_")
+    out = scratch.mkdtemp("sink_b15_")
     o.write.mode("overwrite").partitionBy("o_orderstatus").parquet(out)
     # explicit schema: empty-write read-back must not fail inference (a5 note)
     fact = spark.read.schema(SCHEMAS["orders"]).parquet(out)
@@ -122,7 +121,7 @@ def a14_sink_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = scan(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_shipdate", "l_extendedprice"
     )
-    out = tempfile.mkdtemp(prefix="sink_a14_")
+    out = scratch.mkdtemp("sink_a14_")
     (
         li.repartitionByRange(8, "l_shipdate")
         .sortWithinPartitions("l_shipdate")
@@ -167,7 +166,7 @@ def a19_small_file_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     (oracle: source equality); tests/test_operators.py pins the file
     count and the no-shuffle plan."""
     o = scan(spark, sf_dir, "orders")
-    frag = tempfile.mkdtemp(prefix="sink_a19_frag_")
+    frag = scratch.mkdtemp("sink_a19_frag_")
     o.repartition(64).write.mode("overwrite").parquet(frag)
     out = compact_parquet_dir(spark, frag)
     return spark.read.parquet(out)
@@ -187,7 +186,7 @@ def compact_parquet_dir(
         if e.name.endswith(".parquet")
     )
     n_target = max(1, math.ceil(n_bytes / target_bytes))
-    out = tempfile.mkdtemp(prefix="compacted_")
+    out = scratch.mkdtemp("compacted_")
     (
         spark.read.parquet(src)
         .coalesce(n_target)
@@ -248,7 +247,7 @@ def a22_zorder_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_orderkey", "l_partkey", "l_suppkey", "l_extendedprice"
     )
     z = zvalue(F.col("l_partkey"), F.col("l_suppkey"))
-    out = tempfile.mkdtemp(prefix="sink_a22_")
+    out = scratch.mkdtemp("sink_a22_")
     (
         li.withColumn("zv", z)
         .repartitionByRange(8, "zv")

@@ -28,6 +28,7 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
+from .. import scratch
 from ..registry import query
 from ..sources.tables import path_of, scan
 from ..statefile import publish, read_json
@@ -559,10 +560,8 @@ def a20_python_datasource_writer(spark: SparkSession, sf_dir: str) -> DataFrame:
     messages (file names + counts, not data). The rename-on-commit
     discipline is what makes speculative/retried tasks safe — the
     same protocol Spark's own FileOutputCommitter v1 uses."""
-    import tempfile
-
     register_sink(spark)
-    out = tempfile.mkdtemp(prefix="a20_sink_")
+    out = scratch.mkdtemp("a20_sink_")
     from .tables import spread
 
     # write parallelism = input partitions (docstring contract), and

@@ -58,3 +58,12 @@ def publish(path: str, text: str, staged=None) -> None:
     if staged is not None:
         staged()
     os.replace(tmp, path)
+
+
+def sweep(path: str) -> None:
+    """Remove the temps crashed publishes of `path` left. Call it only
+    under the lock every publisher of `path` holds."""
+    d, name = os.path.split(path)
+    for f in os.listdir(d):
+        if f.startswith(f".{name}.") and f.endswith(".tmp"):
+            os.remove(os.path.join(d, f))

@@ -28,17 +28,19 @@ from __future__ import annotations
 
 import contextlib
 import errno
+import glob
 import json
 import os
-import tempfile
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import scratch
 from ..operators.numeric import FIN
 from ..registry import EVENTS_US, query
 from ..sources.tables import scan
-from ..statefile import exclusive, publish, read_json
+from ..statefile import exclusive, publish, read_json, sweep
 
 
 def _require(ok: bool, what: str) -> None:
@@ -76,11 +78,8 @@ def _stage_batch_dirs(df: DataFrame, **buckets):
     the write; staged data files keep the source schema. At 100 TB the
     staged files are the fixture INPUT build (the log an upstream sink
     would have written), not query output."""
-    import glob
-    import shutil
-
     cols = {f"__{axis}": bucket for axis, bucket in buckets.items()}
-    tmp = tempfile.mkdtemp(prefix="stage_batches_")
+    tmp = scratch.mkdtemp("stage_batches_")
     df.withColumns(cols).write.mode("overwrite").partitionBy(*cols).parquet(tmp)
 
     def take(axis: str, value, dest: str) -> None:
@@ -113,6 +112,40 @@ def _stage_batch_dirs(df: DataFrame, **buckets):
         shutil.rmtree(tmp, ignore_errors=True)
 
     return take, done
+
+
+def _batch_ids(log_dir: str | None, missing_ok: bool = False) -> list[int]:
+    """Sorted ids of the ``batch_id=N`` dirs under ``log_dir`` (the i11
+    sink layout); with ``missing_ok`` an absent log has none."""
+    if missing_ok and (log_dir is None or not os.path.isdir(log_dir)):
+        return []
+    return sorted(
+        int(d.split("=", 1)[1]) for d in os.listdir(log_dir)
+        if d.startswith("batch_id=")
+    )
+
+
+def _contiguous_tail(
+    store_root: str, ids: list[int], ct: int, h: int | None = None
+) -> list[int]:
+    """The ids in ``(ct, h]`` (above ``ct`` if ``h`` is None), which
+    must be exactly ``ct+1, ..., end``: log retention can delete batch
+    ct+1 and keep later ones, and folding past that gap would serve
+    state silently missing batches (r13 ADVICE)."""
+    tail = [b for b in ids if b > ct and (h is None or b <= h)]
+    end = h if h is not None else (tail[-1] if tail else ct)
+    if tail != list(range(ct + 1, end + 1)):
+        raise HorizonMismatch(
+            f"store {store_root} compacted through {ct} but its pending "
+            f"batch ids {tail} are not a contiguous cover of ({ct}, {end}]"
+        )
+    return tail
+
+
+def _read_batches(spark: SparkSession, log_dir: str, ids: list) -> DataFrame:
+    return spark.read.parquet(
+        *[os.path.join(log_dir, f"batch_id={b}") for b in ids]
+    )
 
 
 class SnapshotStore:
@@ -228,11 +261,15 @@ class SnapshotStore:
         src = delta if base is None else base.unionByName(delta)
         return self._latest_per_key(src)
 
+    @contextlib.contextmanager
     def _locked(self):
         """Exclusive flock over the store: two compactors racing would
         both write vN+1 with different subsets and one commit would
-        vanish. Readers are unaffected (they pin a version)."""
-        return exclusive(os.path.join(self.root, "_LOCK"))
+        vanish. Readers are unaffected (they pin a version). A `_LATEST`
+        temp found under it is a crashed commit's, and is swept."""
+        with exclusive(os.path.join(self.root, "_LOCK")):
+            sweep(os.path.join(self.root, "_LATEST"))
+            yield
 
     def _advance(
         self, spark: SparkSession, meta: dict, folded: DataFrame, through: int
@@ -255,32 +292,12 @@ class SnapshotStore:
         current base into version N+1. Returns the new version."""
         with self._locked():
             meta = self._meta()
-            new_batches = sorted(
-                int(d.split("=", 1)[1])
-                for d in os.listdir(log_dir)
-                if d.startswith("batch_id=")
-                and int(d.split("=", 1)[1]) > meta["compacted_through"]
+            new_batches = _contiguous_tail(
+                self.root, _batch_ids(log_dir), meta["compacted_through"]
             )
             if not new_batches:
                 return meta["version"]
-            want = list(
-                range(meta["compacted_through"] + 1, new_batches[-1] + 1)
-            )
-            if new_batches != want:
-                # oldest-first log retention can delete batch ct+1 while
-                # ct+2..N remain; folding that gap would COMMIT a
-                # snapshot silently missing batches and advance
-                # compacted_through past the hole — the wrong-answer
-                # class consistent_read's tail check refuses on the read
-                # path, here baked durably into the store (r13 ADVICE).
-                raise HorizonMismatch(
-                    f"store {self.root} compacted through "
-                    f"{meta['compacted_through']} but log {log_dir} holds "
-                    f"non-contiguous new batches {new_batches}"
-                )
-            delta = spark.read.parquet(
-                *[os.path.join(log_dir, f"batch_id={b}") for b in new_batches]
-            )
+            delta = _read_batches(spark, log_dir, new_batches)
             base = (
                 None
                 if meta["version"] == 0
@@ -308,18 +325,9 @@ class SnapshotStore:
         with self._locked():
             meta = self._meta()
             v = meta["version"]
-            pending = sorted(x for x in batches if x > meta["compacted_through"])
-            if pending and pending != list(
-                range(meta["compacted_through"] + 1, pending[-1] + 1)
-            ):
-                # same gap refusal as compact(): a missing intermediate
-                # batch id means the upstream log lost committed data —
-                # folding past it would durably skip those rows.
-                raise HorizonMismatch(
-                    f"store {self.root} compacted through "
-                    f"{meta['compacted_through']} but the pending batch "
-                    f"ids {pending} are non-contiguous"
-                )
+            pending = _contiguous_tail(
+                self.root, sorted(batches), meta["compacted_through"]
+            )
             for b in pending:
                 self._crash(f"before_fold_batch_{b}")
                 delta = load(batches[b])
@@ -359,7 +367,6 @@ class SnapshotStore:
         the listing instant."""
         if keep_last < 1:
             raise ValueError(f"keep_last must be >= 1, got {keep_last}")
-        import shutil
 
         with self._locked():
             meta = self._meta()
@@ -474,32 +481,15 @@ class SnapshotStore:
             if meta["version"] > 0
             else None
         )
-        tail = []
-        if log_dir is not None and os.path.isdir(log_dir):
-            tail = sorted(
-                int(d.split("=", 1)[1])
-                for d in os.listdir(log_dir)
-                if d.startswith("batch_id=")
-                and int(d.split("=", 1)[1]) > meta["compacted_through"]
-            )
+        tail = _contiguous_tail(
+            self.root, _batch_ids(log_dir, missing_ok=True),
+            meta["compacted_through"],
+        )
         if base is None and not tail:
             raise ValueError(f"empty snapshot store {self.root}")
         if not tail:
             return base  # committed versions are already folded
-        if tail != list(range(meta["compacted_through"] + 1, tail[-1] + 1)):
-            # merge-on-read over a gapped tail serves state missing the
-            # deleted batches — same refusal as compact()/consistent_read
-            raise HorizonMismatch(
-                f"store {self.root} compacted through "
-                f"{meta['compacted_through']} but log tail {tail} is "
-                f"non-contiguous"
-            )
-        return self._fold(
-            base,
-            spark.read.parquet(
-                *[os.path.join(log_dir, f"batch_id={b}") for b in tail]
-            ),
-        )
+        return self._fold(base, _read_batches(spark, log_dir, tail))
 
 
 @query(
@@ -529,9 +519,9 @@ def a15_snapshot_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     the flock."""
     cols = ["event_id", "user_id", "ts", "event_type", "value"]
     e = scan(spark, sf_dir, "events").select(*cols)
-    log_dir = tempfile.mkdtemp(prefix="a15_log_")
+    log_dir = scratch.mkdtemp("a15_log_")
     store = SnapshotStore(
-        tempfile.mkdtemp(prefix="a15_snap_"),
+        scratch.mkdtemp("a15_snap_"),
         key="user_id",
         order=["ts", "event_id"],
     )
@@ -611,9 +601,9 @@ def a16_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     depend on."""
     cols = ["event_id", "user_id", "ts", "event_type", "value"]
     e = scan(spark, sf_dir, "events").select(*cols)
-    log_dir = tempfile.mkdtemp(prefix="a16_log_")
+    log_dir = scratch.mkdtemp("a16_log_")
     store = SnapshotStore(
-        tempfile.mkdtemp(prefix="a16_snap_"),
+        scratch.mkdtemp("a16_snap_"),
         key="user_id",
         order=["ts", "event_id"],
     )
@@ -649,19 +639,11 @@ def prune_log(store: SnapshotStore, log_dir: str) -> list[int]:
     after every compaction keeps the log's size proportional to the
     uncompacted tail, which is what makes the merge-on-read tail cost
     genuinely delta-sized forever."""
-    import shutil
-
     with store._locked():
         ct = store._meta()["compacted_through"]
-        pruned = []
-        if os.path.isdir(log_dir):
-            for d in sorted(os.listdir(log_dir)):
-                if not d.startswith("batch_id="):
-                    continue
-                b = int(d.split("=", 1)[1])
-                if b <= ct:
-                    shutil.rmtree(os.path.join(log_dir, d))
-                    pruned.append(b)
+        pruned = [b for b in _batch_ids(log_dir, missing_ok=True) if b <= ct]
+        for b in pruned:
+            shutil.rmtree(os.path.join(log_dir, f"batch_id={b}"))
         return pruned
 
 
@@ -745,32 +727,10 @@ def consistent_read(
                         )
                     out.append(base)
                     continue
-                avail = (
-                    sorted(
-                        int(d.split("=", 1)[1])
-                        for d in os.listdir(log_dir)
-                        if d.startswith("batch_id=")
-                    )
-                    if log_dir is not None and os.path.isdir(log_dir)
-                    else []
+                tail = _contiguous_tail(
+                    store.root, _batch_ids(log_dir, missing_ok=True), ct, h
                 )
-                tail = [b for b in avail if ct < b <= h]
-                if tail != list(range(ct + 1, h + 1)):
-                    # the tail must COVER (ct, h] contiguously, not just
-                    # reach h: oldest-first log retention can delete an
-                    # intermediate batch while keeping later ones (e.g.
-                    # ct=1, h=5, log holds {4,5}), and folding that gap
-                    # would silently serve state missing batches 2-3 —
-                    # exactly the wrong-answer read HorizonMismatch
-                    # exists to refuse.
-                    raise HorizonMismatch(
-                        f"store {store.root} compacted through {ct} and "
-                        f"its log tail {tail} does not contiguously "
-                        f"cover ({ct}, {h}]"
-                    )
-                delta = spark.read.parquet(
-                    *[os.path.join(log_dir, f"batch_id={b}") for b in tail]
-                )
+                delta = _read_batches(spark, log_dir, tail)
                 out.append(store._fold(base, delta))
             return h, out
         except HorizonMismatch as err:
@@ -876,16 +836,11 @@ def i21_consistent_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     (that is the premise — a shared upstream batch sequence), so the
     source is staged exactly once; per-store logs would change
     nothing semantically, only double the staging."""
-    import atexit
-    import shutil as _shutil
-
     cols = ["event_id", "user_id", "ts", "event_type", "value"]
     e = scan(spark, sf_dir, "events").select(*cols)
-    log_dir = tempfile.mkdtemp(prefix="i21_log_")
-    root_a = tempfile.mkdtemp(prefix="i21_snap_a_")
-    root_b = tempfile.mkdtemp(prefix="i21_snap_b_")
-    for d in (log_dir, root_a, root_b):
-        atexit.register(_shutil.rmtree, d, ignore_errors=True)
+    log_dir = scratch.mkdtemp("i21_log_")
+    root_a = scratch.mkdtemp("i21_snap_a_")
+    root_b = scratch.mkdtemp("i21_snap_b_")
     store_a = SnapshotStore(root_a, key="user_id", order=["ts", "event_id"])
     store_b = SnapshotStore(
         root_b, key="user_id", order=[], fold=_user_rollup_fold
@@ -1001,6 +956,7 @@ class StoreGroup:
         group object can never leak its fold into another thread's
         in-flight manifest."""
         with exclusive(os.path.join(self.root, "_GLOCK")):
+            sweep(self._manifest_path())  # a crashed commit's temp
             handle = _GroupCommit(self)
             yield handle
             versions = {
@@ -1045,7 +1001,6 @@ class StoreGroup:
         retention cadence must exceed manifest-reader lifetime."""
         if keep_last < 1:
             raise ValueError(f"keep_last must be >= 1, got {keep_last}")
-        import shutil
 
         with exclusive(os.path.join(self.root, "_GLOCK")):
             pins = self.manifest()
@@ -1164,18 +1119,13 @@ def i22_store_group_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     is delta-sized per member (the store's own incremental contract);
     the consumer join shuffles each side once on event_type, with the
     tiny types rollup broadcast by AQE."""
-    import atexit
-    import shutil as _shutil
-
     cols = ["event_id", "user_id", "ts", "event_type", "value"]
     e = scan(spark, sf_dir, "events").select(*cols)
-    log_a = tempfile.mkdtemp(prefix="i22_log_users_")
-    log_b = tempfile.mkdtemp(prefix="i22_log_types_")
-    root_a = tempfile.mkdtemp(prefix="i22_snap_users_")
-    root_b = tempfile.mkdtemp(prefix="i22_snap_types_")
-    group_root = tempfile.mkdtemp(prefix="i22_group_")
-    for d in (log_a, log_b, root_a, root_b, group_root):
-        atexit.register(_shutil.rmtree, d, ignore_errors=True)
+    log_a = scratch.mkdtemp("i22_log_users_")
+    log_b = scratch.mkdtemp("i22_log_types_")
+    root_a = scratch.mkdtemp("i22_snap_users_")
+    root_b = scratch.mkdtemp("i22_snap_types_")
+    group_root = scratch.mkdtemp("i22_group_")
     store_a = SnapshotStore(root_a, key="user_id", order=["ts", "event_id"])
     store_b = SnapshotStore(
         root_b, key="event_type", order=[], fold=_type_rollup_fold
@@ -1305,9 +1255,9 @@ def i23_time_travel_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     a silent partial scan."""
     cols = ["event_id", "user_id", "ts", "event_type", "value"]
     e = scan(spark, sf_dir, "events").select(*cols)
-    log_dir = tempfile.mkdtemp(prefix="i23_log_")
+    log_dir = scratch.mkdtemp("i23_log_")
     store = SnapshotStore(
-        tempfile.mkdtemp(prefix="i23_snap_"),
+        scratch.mkdtemp("i23_snap_"),
         key="user_id",
         order=["ts", "event_id"],
     )

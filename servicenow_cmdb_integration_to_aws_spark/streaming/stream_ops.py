@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from .. import scratch
 from ..operators.numeric import FIN, METRIC_BOUND
 from ..registry import EVENTS_US, query
 from ..sources.tables import path_of
@@ -116,7 +117,7 @@ def _staged_dir_for(
         if hit[0] == stamp:
             return hit[1]
         shutil.rmtree(hit[1], ignore_errors=True)
-    d = tempfile.mkdtemp(prefix=prefix)
+    d = tempfile.mkdtemp(prefix=prefix, dir=scratch.root())
     _stage_copy(path_of(sf_dir, table), d, table)
     cache[sf_dir] = (stamp, d)
     return d
@@ -139,7 +140,7 @@ def _stage_bucket_files(
     the store folds are content-total."""
     import glob as _glob
 
-    tmp = tempfile.mkdtemp(prefix="stage_buckets_")
+    tmp = scratch.mkdtemp("stage_buckets_")
     try:
         (
             df.withColumn("__bucket", bucket)
@@ -235,7 +236,7 @@ def _drain(spark: SparkSession, writer) -> None:
     ``start()``: StreamExecution clones the session in its
     constructor, so the query keeps the pinned state partitions while
     the caller's value is restored before the wait."""
-    ckpt = tempfile.mkdtemp(prefix="ckpt_")
+    ckpt = scratch.mkdtemp("ckpt_")
     try:
         writer = writer.option("checkpointLocation", ckpt).trigger(
             availableNow=True
@@ -648,7 +649,7 @@ def i11_foreach_batch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     foreachBatch is also where exactly-once sinks hook in: batch_id is
     stable across retries, so an idempotent write keyed on it
     deduplicates replays."""
-    log_dir = tempfile.mkdtemp(prefix="i11_log_")
+    log_dir = scratch.mkdtemp("i11_log_")
     s = _stream_events(spark, sf_dir).select(
         "event_id", "user_id", "ts", "event_type", "value"
     )
@@ -946,7 +947,7 @@ def i17_stream_file_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB notes: per-micro-batch file parallelism = input
     partitions; the log write is one driver-side record per batch;
     downstream batch readers treat the result as a normal table."""
-    out = tempfile.mkdtemp(prefix="i17_sink_")
+    out = scratch.mkdtemp("i17_sink_")
     s = _stream_events(spark, sf_dir).filter(
         F.col("event_type") == "purchase"
     ).select("event_id", "user_id", "ts", "value")
@@ -1092,19 +1093,13 @@ def i18_stream_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame
     a15/a20 (tests/test_streaming.py). The source is staged as two
     files so availableNow commits two batches — a real deployment's
     log just has one entry per micro-batch."""
-    import atexit
-    import glob as _glob
-    import shutil as _shutil
-
     from ..operators.numeric import finite_metric
     from ..sources.tables import scan as _scan
 
     # 1. stage the source as TWO files → two committed bronze batches
-    src = tempfile.mkdtemp(prefix="i18_src_")
-    out = tempfile.mkdtemp(prefix="i18_bronze_")
-    silver_root = tempfile.mkdtemp(prefix="i18_silver_")
-    for d in (src, out, silver_root):
-        atexit.register(_shutil.rmtree, d, ignore_errors=True)
+    src = scratch.mkdtemp("i18_src_")
+    out = scratch.mkdtemp("i18_bronze_")
+    silver_root = scratch.mkdtemp("i18_silver_")
     ev = _scan(spark, sf_dir, "events").select("event_id", "ts", "value")
     # pmod over a coalesced key so the two halves provably PARTITION
     # the corpus: bare `event_id % 2 == i` silently drops NULL ids
@@ -1228,10 +1223,14 @@ def _i19_fold_batches(
     partition pruning), the incremental leg reads only this batch's
     files, and the affected-day set never leaves the executors
     (broadcast, no driver collect)."""
+    from .compaction import _contiguous_tail
+
     with store._locked():
         meta = store._meta()
         v = meta["version"]
-        for b in sorted(x for x in aug if x > meta["compacted_through"]):
+        for b in _contiguous_tail(
+            store.root, sorted(aug), meta["compacted_through"]
+        ):
             store._crash(f"before_fold_batch_{b}")
             own, cum = aug[b]
             if not own:
@@ -1334,17 +1333,11 @@ def i19_stream_retract_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the kill-at-every-step guarantees carry over; the fold is
     crash-resumable because every leg derives from committed batch
     ids only (tests/test_streaming.py pins both)."""
-    import atexit
-    import glob as _glob
-    import shutil as _shutil
-
     from ..sources.tables import scan as _scan
 
-    src = tempfile.mkdtemp(prefix="i19_src_")
-    out = tempfile.mkdtemp(prefix="i19_bronze_")
-    silver_root = tempfile.mkdtemp(prefix="i19_silver_")
-    for d in (src, out, silver_root):
-        atexit.register(_shutil.rmtree, d, ignore_errors=True)
+    src = scratch.mkdtemp("i19_src_")
+    out = scratch.mkdtemp("i19_bronze_")
+    silver_root = scratch.mkdtemp("i19_silver_")
 
     ev = _scan(spark, sf_dir, "events").select("event_id", "ts", "value")
     ins = ev.select(
@@ -1579,15 +1572,10 @@ def i20_stream_sink_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     File-count + crash-at-every-step gates live in
     tests/test_streaming.py; the no-shuffle rewrite plan is a19's
     (tests/test_operators.py)."""
-    import atexit
-    import glob as _glob
-
     from ..sources.tables import scan as _scan
 
-    src = tempfile.mkdtemp(prefix="i20_src_")
-    out = tempfile.mkdtemp(prefix="i20_sink_")
-    for d in (src, out):
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
+    src = scratch.mkdtemp("i20_src_")
+    out = scratch.mkdtemp("i20_sink_")
 
     ev = (
         _scan(spark, sf_dir, "events")

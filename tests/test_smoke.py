@@ -56,10 +56,28 @@ def test_committed_driver_order_is_current():
     assert tool.driver_order() == json.loads(tool.OUT.read_text())
 
 
-def test_state_file_jobs_live_in_statefile_only():
-    """Locks and durable publishes have one home, `statefile.py`: no
-    other package module imports fcntl or calls os.fsync or
-    tempfile.mkstemp."""
+_TEMP_CALLS = {("tempfile", f) for f in ("mkdtemp", "mkstemp", "TemporaryDirectory")}
+
+
+@pytest.mark.parametrize(
+    "home, module, names, dir_ok",
+    [
+        # locks and durable publishes
+        ("statefile.py", "fcntl", {("os", "fsync"), ("tempfile", "mkstemp")}, False),
+        # temp dirs and exit cleanups; a call that names its parent
+        # dir (a cache under scratch.root(), a sink's hidden temp) is
+        # placed by its caller
+        ("scratch.py", "atexit", _TEMP_CALLS, True),
+    ],
+    ids=["statefile", "scratch"],
+)
+def test_state_file_jobs_live_in_statefile_only(home, module, names, dir_ok):
+    """A recurring job has one home module: no other package module
+    imports `module` or uses one of `names` (unless `dir_ok` and the
+    call passes `dir=`). statefile.py owns the lock (fcntl) and the
+    durable publish (os.fsync, tempfile.mkstemp); scratch.py owns temp
+    dirs (tempfile.mkdtemp, mkstemp, TemporaryDirectory) and the exit
+    cleanup (atexit)."""
     import ast
     import pathlib
 
@@ -68,27 +86,64 @@ def test_state_file_jobs_live_in_statefile_only():
     root = pathlib.Path(pkg.__file__).parent
     offenders = []
     for path in sorted(root.rglob("*.py")):
-        if path.name == "statefile.py" and path.parent == root:
+        if path.name == home and path.parent == root:
             continue
-        for node in ast.walk(ast.parse(path.read_text())):
+        tree = ast.parse(path.read_text())
+        placed = {
+            id(node.func)
+            for node in ast.walk(tree)
+            if dir_ok
+            and isinstance(node, ast.Call)
+            and any(k.arg == "dir" for k in node.keywords)
+        }
+        for node in ast.walk(tree):
             if isinstance(node, ast.Import):
-                bad = any(a.name == "fcntl" for a in node.names)
+                bad = any(a.name == module for a in node.names)
             elif isinstance(node, ast.ImportFrom):
-                bad = node.module == "fcntl" or (
-                    node.module in ("os", "tempfile")
-                    and any(a.name in ("fsync", "mkstemp") for a in node.names)
+                bad = node.module == module or any(
+                    (node.module, a.name) in names for a in node.names
                 )
             elif isinstance(node, ast.Attribute):
                 bad = (
                     isinstance(node.value, ast.Name)
-                    and (node.value.id, node.attr)
-                    in (("os", "fsync"), ("tempfile", "mkstemp"))
+                    and (node.value.id, node.attr) in names
+                    and id(node) not in placed
                 )
             else:
                 continue
             if bad:
                 offenders.append(f"{path.relative_to(root)}:{node.lineno}")
     assert not offenders, offenders
+
+
+def test_scratch_root_is_lazy_and_removed_at_exit(tmp_path):
+    """Importing scratch makes no dir (Spark's Python workers import
+    package modules and never run exit handlers); the first mkdtemp
+    makes the per-process root; a scope frees only the dirs its own
+    thread made in it; a normal exit removes the root with every dir
+    under it. No Spark."""
+    code = (
+        "import os, sys, threading\n"
+        "from servicenow_cmdb_integration_to_aws_spark import scratch\n"
+        "assert not os.listdir(sys.argv[1])\n"
+        "a, other = scratch.mkdtemp('a_'), []\n"
+        "with scratch.scope():\n"
+        "    b = scratch.mkdtemp('b_')\n"
+        "    t = threading.Thread(target=lambda: other.append(scratch.mkdtemp('c_')))\n"
+        "    t.start(); t.join(60)\n"
+        "assert not os.path.exists(b) and os.path.isdir(a) and os.path.isdir(other[0])\n"
+        "assert os.path.dirname(a) == os.path.dirname(other[0]) == scratch.root()\n"
+        "print(scratch.root())\n"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, "-c", code, str(tmp_path)],
+        cwd=root, env={**os.environ, "TMPDIR": str(tmp_path)},
+        capture_output=True, text=True, timeout=120,
+    )
+    assert proc.returncode == 0, proc.stderr
+    assert proc.stdout.strip().startswith(str(tmp_path))
+    assert not os.listdir(tmp_path)
 
 
 @pytest.mark.parametrize(

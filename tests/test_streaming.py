@@ -674,6 +674,7 @@ def test_snapshot_compactor_crash_at_every_step(spark, point):
     state = {r["user_id"]: r["event_id"] for r in store.read(spark).collect()}
     assert state == {1: 11, 2: 20, 3: 30}
     assert store._meta()["compacted_through"] == 1
+    assert not [p for p in os.listdir(store.root) if p.endswith(".tmp")]
 
 
 def test_foreach_batch_retry_idempotent(spark):
@@ -1015,6 +1016,7 @@ def test_drain_pins_state_partitions_only_across_start(
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    from servicenow_cmdb_integration_to_aws_spark import scratch
     from servicenow_cmdb_integration_to_aws_spark.streaming.stream_ops import (
         _drain,
     )
@@ -1049,7 +1051,38 @@ def test_drain_pins_state_partitions_only_across_start(
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
     assert seen and all(n == 8 and caller == "5" for n, caller in seen), seen
-    assert not [p for p in os.listdir(tmp_path) if p.startswith("ckpt_")]
+    assert not [p for p in os.listdir(scratch.root()) if p.startswith("ckpt_")]
+
+
+def test_scope_frees_query_dirs_but_not_process_caches(spark, sf_dir, duck):
+    """scratch.scope() frees the dirs a15 and a5 made inside it once
+    their results are consumed; the staged stream source made inside
+    the same block is a process cache and survives, so a7 still reads
+    it afterwards and matches its oracle."""
+    from check_parity import rows_canon
+
+    from servicenow_cmdb_integration_to_aws_spark import scratch
+    from servicenow_cmdb_integration_to_aws_spark.streaming.stream_ops import (
+        _STAGED,
+        _stage_dir,
+    )
+
+    queries = entrymod.queries()
+    before = set(os.listdir(scratch.root()))
+    _STAGED.pop(sf_dir, None)  # restage inside the block
+    with scratch.scope():
+        for qid in ("a15_snapshot_compact", "a5_sink_partitioned"):
+            assert queries[qid](spark, sf_dir).collect(), qid
+        staged = _stage_dir(sf_dir)
+        made = set(os.listdir(scratch.root())) - before
+    assert {p.split("_")[0] for p in made} >= {"a15", "sink"}, made
+    assert made & set(os.listdir(scratch.root())) == {os.path.basename(staged)}
+
+    df = queries["a7_replay_stream"](spark, sf_dir)
+    got = rows_canon(df.columns, df.collect())
+    oracle = duck.execute(entrymod.oracle_sql()["a7_replay_stream"])
+    want = rows_canon([c[0] for c in oracle.description], oracle.fetchall())
+    assert got == want
 
 
 @pytest.mark.parametrize(
@@ -2041,6 +2074,24 @@ def test_fold_batches_refuses_gap_in_pending_ids(spark):
     # contiguous ids fold fine, one version per batch
     write_batch(1, [(3, 30, 2)])
     assert store.fold_batches(spark, {0: 0, 1: 1, 2: 2}, load) == 3
+
+
+def test_i19_fold_refuses_gap_in_sink_batch_ids(spark, tmp_path):
+    """i19's delete-aware fold takes the same sink-log batch ids as
+    fold_batches and must refuse the same gap: folding batch 2 with
+    batch 1 lost would commit past the hole."""
+    from servicenow_cmdb_integration_to_aws_spark.streaming.compaction import (
+        HorizonMismatch,
+    )
+    from servicenow_cmdb_integration_to_aws_spark.streaming.stream_ops import (
+        _i19_fold_batches,
+        _silver_store,
+    )
+
+    store = _silver_store(str(tmp_path))
+    with pytest.raises(HorizonMismatch, match="contiguous"):
+        _i19_fold_batches(spark, store, {0: ([], []), 2: ([], [])})
+    assert store._meta()["version"] == 0
 
 
 def test_change_feed_sees_payload_only_winner_flip(spark):

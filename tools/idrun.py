@@ -22,6 +22,7 @@ import duckdb
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # the exact surface the driver imports
+from servicenow_cmdb_integration_to_aws_spark import scratch
 from servicenow_cmdb_integration_to_aws_spark.session import build_session
 from servicenow_cmdb_integration_to_aws_spark.sources.tables import TABLE_NAMES
 
@@ -73,12 +74,14 @@ def each(
     ``check`` returns ``(verdict, detail)``; a detail that is not None
     is printed as ``<verdict> <qid>: <detail> (<seconds>s)``. An
     exception is that id's failure: verdict ``err``, the exception as
-    its detail."""
+    its detail. ``check`` consumes the id's results, so the temp dirs
+    its query bodies made are freed when it returns."""
     tally: Counter = Counter()
     for qid in ids:
         t0 = time.perf_counter()
         try:
-            verdict, detail = check(qid)
+            with scratch.scope():
+                verdict, detail = check(qid)
         except Exception as ex:  # noqa: BLE001 - one id fails, the run goes on
             verdict, detail = err, f"{type(ex).__name__}: {ex}"
         if detail is not None:
