@@ -37,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..sources.tables import scan
+from ..sources.tables import frames, memo, scan
 
 #: payload order for each table (every non-id column, a total order).
 #: The embedding array is NOT compared raw: the two engines disagree on
@@ -74,52 +74,24 @@ def _canon(df: DataFrame, id_col: str, order: list) -> DataFrame:
     )
 
 
-def _cached_canon(spark: SparkSession, sf_dir: str, table: str, build):
-    """Serve ONE immutable canonical plan fragment per (session,
-    sf_dir, table, content-stamp) — the scan() cache discipline
-    (sources/tables.py r10) extended one derivation up: canon rides in
-    front of 15 id-keyed queries, and its window construction costs
-    py4j round-trips on EVERY query build (construction is the
-    measured drain floor). Same guards as scan(): the cache dict lives
-    ON the session object, the key carries the content stamp (in-place
-    regen ⇒ miss + evict), derivations always create new DataFrames,
-    and a lost build race returns the first writer's fragment."""
-    from ..sources.tables import _SCAN_DF_LOCK, content_stamp, path_of
-
-    key = (sf_dir, table + "::canon", content_stamp(path_of(sf_dir, table)))
-    with _SCAN_DF_LOCK:
-        cache = getattr(spark, "_cmdb_scan_df_cache", None)
-        if cache is None:
-            cache = {}
-            spark._cmdb_scan_df_cache = cache
-        hit = cache.get(key)
-    if hit is not None:
-        return hit[0]
-    df = build()
-    with _SCAN_DF_LOCK:
-        won = cache.get(key)
-        if won is not None:
-            return won[0]
-        for stale in [k for k in cache if k[:2] == key[:2] and k != key]:
-            del cache[stale]
-        cache[key] = (df, False)
-    return df
-
-
+# canon rides in front of 15 id-keyed queries and its window costs
+# py4j round-trips on every build (construction is the measured drain
+# floor), so both fragments are memoised with scan()'s, one derivation up
 def canon_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """`documents` with exactly one deterministic row per doc_id."""
-    return _cached_canon(
-        spark,
+    return memo(
+        frames(spark),
         sf_dir,
         "documents",
         lambda: _canon(scan(spark, sf_dir, "documents"), "doc_id", _DOC_ORDER),
+        tag="canon",
     )
 
 
 def canon_vecs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """`embeddings` with exactly one deterministic row per vec_id."""
-    return _cached_canon(
-        spark,
+    return memo(
+        frames(spark),
         sf_dir,
         "embeddings",
         lambda: _canon(
@@ -127,6 +99,7 @@ def canon_vecs(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id",
             [_VEC_SUBST, _VEC_MASK, "label"],
         ),
+        tag="canon",
     )
 
 

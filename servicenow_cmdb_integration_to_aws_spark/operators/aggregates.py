@@ -243,14 +243,14 @@ def d7_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
 def d8_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit grouping sets (d8) via the SQL surface (same Catalyst
     Expand operator as rollup/cube)."""
-    scan(spark, sf_dir, "lineitem").createOrReplaceTempView("d8_lineitem")
     return spark.sql(
         """
         SELECT l_returnflag, l_linestatus,
                COUNT(*) AS n, SUM(l_quantity) AS sum_qty
-        FROM d8_lineitem
+        FROM {lineitem}
         GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-        """
+        """,
+        lineitem=scan(spark, sf_dir, "lineitem"),
     )
 
 

@@ -20,6 +20,7 @@ narrow op.
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -27,20 +28,17 @@ from pyspark.sql import functions as F
 
 from .. import scratch
 from ..registry import query
-from ..sources.tables import SCHEMAS, scan, scan_evolving
-
-_DRIFT_CACHE: dict[str, str] = {}
+from ..sources.tables import ARTIFACTS, SCHEMAS, memo, scan, scan_evolving
 
 
 def _drifted_supplier_path(spark: SparkSession, sf_dir: str) -> str:
-    """Write-once drifted copy of `supplier`: s_acctbal DROPPED,
-    s_rating ADDED, s_nationkey widened int→bigint. Deterministic, so
-    the evolved scan has an exact SQL oracle over the original table."""
-    key = sf_dir.rstrip("/")
-    if key not in _DRIFT_CACHE:
-        # a process cache: under the root, outside any scope
+    """Drifted copy of `supplier`, written once per table generation:
+    s_acctbal DROPPED, s_rating ADDED, s_nationkey widened int→bigint.
+    Deterministic, so the evolved scan has an exact SQL oracle over the
+    original table."""
+
+    def build() -> str:
         d = tempfile.mkdtemp(prefix="a10_drift_", dir=scratch.root())
-        out = os.path.join(d, "supplier.parquet")
         (
             scan(spark, sf_dir, "supplier")
             .select(
@@ -50,10 +48,15 @@ def _drifted_supplier_path(spark: SparkSession, sf_dir: str) -> str:
                 (F.col("s_suppkey") % 5).cast("int").alias("s_rating"),
             )
             .write.mode("overwrite")
-            .parquet(out)
+            .parquet(os.path.join(d, "supplier.parquet"))
         )
-        _DRIFT_CACHE[key] = out
-    return _DRIFT_CACHE[key]
+        return d
+
+    d = memo(
+        ARTIFACTS, sf_dir, "supplier", build, tag="a10_drift",
+        drop=lambda old: shutil.rmtree(old, ignore_errors=True),
+    )
+    return os.path.join(d, "supplier.parquet")
 
 
 @query(

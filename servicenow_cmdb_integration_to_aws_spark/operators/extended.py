@@ -248,20 +248,20 @@ def b13_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
     Catalyst decorrelates both into left-semi and left-anti hash
     joins on o_custkey — same physical shape as c5/c6, proving the
     SQL entry point hits identical plans as the DataFrame DSL."""
-    scan(spark, sf_dir, "customer").createOrReplaceTempView("customer")
-    scan(spark, sf_dir, "orders").createOrReplaceTempView("orders")
     return spark.sql(
         """
         SELECT c_custkey, c_name
-        FROM customer c
-        WHERE EXISTS (SELECT 1 FROM orders o
+        FROM {customer} c
+        WHERE EXISTS (SELECT 1 FROM {orders} o
                       WHERE o.o_custkey = c.c_custkey
                         AND o.o_orderpriority = '1-URGENT')
-          AND NOT EXISTS (SELECT 1 FROM orders o
+          AND NOT EXISTS (SELECT 1 FROM {orders} o
                           WHERE o.o_custkey = c.c_custkey
                             AND o.o_orderstatus = 'F'
                             AND o.o_totalprice > 300000)
-        """
+        """,
+        customer=scan(spark, sf_dir, "customer"),
+        orders=scan(spark, sf_dir, "orders"),
     )
 
 

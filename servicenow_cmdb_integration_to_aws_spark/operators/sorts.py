@@ -69,11 +69,10 @@ def f2_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def f3_offset(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Offset + limit — pagination page 2 (f3)."""
-    o = scan(spark, sf_dir, "orders")
-    o.createOrReplaceTempView("f3_orders")
     return spark.sql(
-        "SELECT o_orderkey, o_totalprice FROM f3_orders "
-        "ORDER BY o_totalprice DESC, o_orderkey LIMIT 10 OFFSET 10"
+        "SELECT o_orderkey, o_totalprice FROM {o} "
+        "ORDER BY o_totalprice DESC, o_orderkey LIMIT 10 OFFSET 10",
+        o=scan(spark, sf_dir, "orders"),
     )
 
 

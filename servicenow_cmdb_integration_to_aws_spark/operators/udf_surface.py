@@ -247,11 +247,9 @@ def k5_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
                 yield (tok,)
 
     spark.udtf.register("tokenize_udtf", Tokenize)
-    scan(spark, sf_dir, "documents").filter(F.col("doc_id") < 50).createOrReplaceTempView(
-        "k5_docs"
-    )
     return spark.sql(
-        "SELECT d.doc_id, t.token FROM k5_docs d, LATERAL tokenize_udtf(d.text) t"
+        "SELECT d.doc_id, t.token FROM {docs} d, LATERAL tokenize_udtf(d.text) t",
+        docs=scan(spark, sf_dir, "documents").filter(F.col("doc_id") < 50),
     )
 
 
@@ -383,12 +381,12 @@ def k10_sql_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
         "RETURNS STRING RETURN CASE WHEN b < 0 THEN 'neg' "
         "WHEN b < 5000 THEN 'std' ELSE 'prem' END"
     )
-    scan(spark, sf_dir, "customer").createOrReplaceTempView("sqlv_customer")
     return spark.sql(
         """
         SELECT c_custkey,
                sqlv_cents(c_acctbal) AS bal_cents,
                sqlv_tier(c_acctbal) AS tier
-        FROM sqlv_customer
-        """
+        FROM {customer}
+        """,
+        customer=scan(spark, sf_dir, "customer"),
     )

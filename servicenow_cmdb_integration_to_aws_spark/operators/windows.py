@@ -214,7 +214,6 @@ def e6_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     see OPTIMIZATION_r14.md; results proven EQUAL against the oracle.
     All frames are grow-only (O(n) incremental), sums stay
     DECIMAL-exact, linear at any scale."""
-    scan(spark, sf_dir, "orders").createOrReplaceTempView("e6_orders")
     return spark.sql(
         """
         WITH data AS (
@@ -232,7 +231,7 @@ def e6_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
                    row_number() OVER (PARTITION BY o_orderpriority
                                       ORDER BY o_totalprice, o_orderkey)
                        AS rid
-            FROM e6_orders WHERE o_totalprice IS NOT NULL
+            FROM {orders} WHERE o_totalprice IS NOT NULL
         ),
         merged AS (
             -- each order emits its DATA row (k = price, is_data=1)
@@ -290,7 +289,8 @@ def e6_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
                     AS DOUBLE) AS band_sum
         FROM win
         GROUP BY o_orderpriority, rid, o_orderkey, o_totalprice
-        """
+        """,
+        orders=scan(spark, sf_dir, "orders"),
     )
 
 

@@ -619,35 +619,31 @@ def p6_encoded_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def p7_sql_passthrough(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Raw SQL entry point (p7): the engine's third query surface —
-    ANSI SQL strings over registered views (`spark.sql`), for the
+    ANSI SQL strings over DataFrames bound into the text
+    (`spark.sql(text, orders=df)`, no session view left behind), for the
     users who bypass both the encoded-query grammar (p1–p5) and the
     DataFrame API. The SAME Catalyst plan space as the DataFrame
     build: the optimizer sees one logical plan regardless of surface,
     so every plan gate (pushdown, broadcast, partial agg) holds here
     too.
 
-    Views are registered under a `sqlv_` prefix (idempotent,
-    per-table) so the shared session's catalog never collides with
-    sinks or other operators' temp objects.
-
     100 TB notes: identical to the equivalent DataFrame query — SQL is
     a frontend, not an execution path; dims broadcast, the fact
     shuffles once on the groupBy keys after partial aggregation."""
-    for t in ("orders", "customer", "nation"):
-        scan(spark, sf_dir, t).createOrReplaceTempView(f"sqlv_{t}")
     return spark.sql(
         """
         SELECT n_name AS nation, o_orderpriority AS priority,
                COUNT(*) AS n_orders,
                CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
                  AS total_price
-        FROM sqlv_orders
-        JOIN sqlv_customer ON c_custkey = o_custkey
-        JOIN sqlv_nation   ON n_nationkey = c_nationkey
+        FROM {orders}
+        JOIN {customer} ON c_custkey = o_custkey
+        JOIN {nation}   ON n_nationkey = c_nationkey
         WHERE o_orderdate >= TIMESTAMP '1999-01-01'
         GROUP BY n_name, o_orderpriority
         ORDER BY nation, priority
-        """
+        """,
+        **{t: scan(spark, sf_dir, t) for t in ("orders", "customer", "nation")},
     )
 
 
@@ -683,7 +679,6 @@ def p9_sql_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders aggregate partial-aggs on month before the exchange. The
     recursive side of a spine join must always be the broadcast side
     — recursing over the FACT is the antipattern."""
-    scan(spark, sf_dir, "orders").createOrReplaceTempView("sqlv_orders")
     return spark.sql(
         """
         WITH RECURSIVE months(m) AS (
@@ -695,9 +690,10 @@ def p9_sql_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT months.m AS month_start,
                COUNT(o_orderkey) AS n_orders
         FROM months
-        LEFT JOIN sqlv_orders ON date_trunc('MONTH', o_orderdate) = months.m
+        LEFT JOIN {orders} ON date_trunc('MONTH', o_orderdate) = months.m
         GROUP BY months.m
-        """
+        """,
+        orders=scan(spark, sf_dir, "orders"),
     )
 
 
@@ -728,20 +724,20 @@ def b18_lateral_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     join. A literal row-at-a-time lateral execution would be 150k
     subqueries — the decorrelation IS the scalability, and the parity
     gate proves semantics survived it."""
-    scan(spark, sf_dir, "orders").createOrReplaceTempView("sqlv_orders")
-    scan(spark, sf_dir, "lineitem").createOrReplaceTempView("sqlv_lineitem")
     return spark.sql(
         """
         SELECT o.o_orderkey, l.l_linenumber, l.l_extendedprice
-        FROM sqlv_orders o, LATERAL (
+        FROM {orders} o, LATERAL (
             SELECT l_linenumber, l_extendedprice
-            FROM sqlv_lineitem
+            FROM {lineitem}
             WHERE l_orderkey = o.o_orderkey
             ORDER BY l_extendedprice DESC, l_linenumber
             LIMIT 2
         ) l
         WHERE o.o_orderdate >= TIMESTAMP '2001-06-01'
-        """
+        """,
+        orders=scan(spark, sf_dir, "orders"),
+        lineitem=scan(spark, sf_dir, "lineitem"),
     )
 
 
@@ -802,17 +798,17 @@ def b19_scalar_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter pushes to the scan while the aggregate still covers ALL
     the customer's orders (the correlation is on the UNFILTERED
     table — a subtle correctness trap the oracle pins)."""
-    scan(spark, sf_dir, "orders").createOrReplaceTempView("sqlv_orders")
     return spark.sql(
         """
         SELECT o.o_orderkey, o.o_totalprice,
                round(o.o_totalprice
-                     / (SELECT MAX(o2.o_totalprice) FROM sqlv_orders o2
+                     / (SELECT MAX(o2.o_totalprice) FROM {orders} o2
                         WHERE o2.o_custkey = o.o_custkey), 6)
                  AS share_of_cust_max
-        FROM sqlv_orders o
+        FROM {orders} o
         WHERE o.o_orderdate >= TIMESTAMP '2001-06-01'
-        """
+        """,
+        orders=scan(spark, sf_dir, "orders"),
     )
 
 
@@ -846,14 +842,13 @@ def p11_parameterized_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     parameter reuse with different values re-plans cheaply because
     the parse tree is cache-shaped, which is exactly how a
     dashboard's repeated filter queries should hit the engine."""
-    scan(spark, sf_dir, "orders").createOrReplaceTempView("sqlv_orders")
     return spark.sql(
         """
         SELECT o_orderpriority,
                COUNT(*) AS n_orders,
                CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
                  AS revenue
-        FROM sqlv_orders
+        FROM {orders}
         WHERE o_orderdate >= :lo_date
           AND o_totalprice >= :min_price
           AND o_orderstatus = :status
@@ -864,4 +859,5 @@ def p11_parameterized_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
             "min_price": 150000.0,
             "status": "O",
         },
+        orders=scan(spark, sf_dir, "orders"),
     )

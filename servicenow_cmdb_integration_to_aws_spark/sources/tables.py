@@ -156,60 +156,76 @@ def content_stamp(path: str) -> tuple:
     return (1, st.st_size, st.st_mtime_ns)
 
 
-#: footer-inferred schema cache, keyed (sf_dir, table). Schema
-#: inference launches 1-2 driver jobs per ``spark.read.parquet`` call;
-#: uncached, EVERY query construction paid that — measurable fixed
-#: overhead across 159 registered ids, and a driver sync a catalog
-#: (metastore) would never do. First touch per (dir, table) still
-#: infers from the footer (a1 schema-on-file semantics, drift caught
-#: once per session); later constructions are job-free.
-_INFERRED: dict[tuple[str, str], T.StructType] = {}
+#: footer-inferred schemas, process-wide (see :func:`footer_schema`)
+_INFERRED: dict = {}
+
+#: files derived from a table (staged stream sources, a10's drifted
+#: copy): dirs under ``scratch.root()``, each removed when superseded
+ARTIFACTS: dict = {}
+
+_MEMO_LOCK = threading.Lock()
 
 
-def _read_cached(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    # content-stamped key: an in-place regen (same path, new bytes)
-    # must re-infer, not serve the dead generation's schema
-    key = (sf_dir, name, content_stamp(path_of(sf_dir, name)))
-    cached = _INFERRED.get(key)
-    if cached is not None:
-        return spark.read.schema(cached).parquet(path_of(sf_dir, name))
-    df = spark.read.parquet(path_of(sf_dir, name))
-    # keep ONE stamp per (sf_dir, name): an in-place regen would
-    # otherwise leak the dead generation's entry for the process
-    # lifetime (the r10 ADVICE class fixed for _STAGED). This runs
-    # outside _SCAN_DF_LOCK (cold misses are concurrent under the
-    # bench's 20-thread drain), so iterate a snapshot and pop() —
-    # two threads listing the same stale key must not double-del,
-    # and a concurrent insert must not break the iteration.
-    for stale in list(_INFERRED):
-        if stale[:2] == key[:2] and stale != key:
-            _INFERRED.pop(stale, None)
-    _INFERRED[key] = df.schema
-    return df
+def memo(cache: dict, sf_dir: str, name: str, build, tag=None, drop=None):
+    """``build()``'s value for table ``name`` of ``sf_dir``, memoised in
+    ``cache`` until the table's files change: the one way the engine
+    keys a derived step to the table it reads.
+
+    The key is ``(sf_dir, name or "name::tag", content_stamp)``, so an
+    in-place regen (same path, new bytes) misses and rebuilds.
+    ``build()`` runs outside the lock (it does py4j or file I/O, and
+    cold misses are concurrent under a client drain) and the first
+    writer wins, so one stamp serves one value. A value that leaves the
+    cache (the superseded generation's entry for the same key, or a
+    build that lost the race) goes to ``drop``, e.g. an rmtree."""
+    label = f"{name}::{tag}" if tag else name
+    key = (sf_dir, label, content_stamp(path_of(sf_dir, name)))
+    with _MEMO_LOCK:
+        if key in cache:
+            return cache[key]
+    value = build()
+    with _MEMO_LOCK:
+        won = cache.setdefault(key, value)
+        gone = [cache.pop(k) for k in list(cache) if k[:2] == key[:2] and k != key]
+    if won is not value:
+        gone.append(value)
+    if drop:
+        for v in gone:
+            drop(v)
+    return won
+
+
+def frames(spark: SparkSession) -> dict:
+    """The session's memo of DataFrame fragments. It rides on the
+    session object, so it dies with it: no ``id()`` reuse across
+    context restarts, and a stopped session's fragments never serve a
+    live one."""
+    return spark.__dict__.setdefault("_cmdb_scan_df_cache", {})
+
+
+def footer_schema(spark: SparkSession, sf_dir: str, name: str) -> T.StructType:
+    """The table's footer-inferred schema. Inference launches 1-2
+    driver jobs per ``spark.read.parquet``, a driver sync a catalog
+    would never do; memoised, only the first construction per table
+    generation pays it (a1 schema-on-file: drift is still caught)."""
+    return memo(
+        _INFERRED, sf_dir, name, lambda: spark.read.parquet(path_of(sf_dir, name)).schema
+    )
 
 
 def _scan_build(
     spark: SparkSession, sf_dir: str, name: str
 ) -> tuple[DataFrame, bool]:
-    """Uncached scan body — see :func:`scan` for the semantics. Returns
-    (df, needs_utc): needs_utc marks the NTZ-events generation whose
-    cast resolves against the session tz at execution."""
-    if name == "events":
-        df = _read_cached(spark, sf_dir, name)
-        ts_type = dict(df.dtypes)["ts"]
-        if ts_type == "bigint":  # ns-as-long generation
-            return (
-                df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000"))),
-                False,
-            )
-        # NTZ→TimestampType keeps the wall-clock ONLY in a UTC session;
-        # any other tz would silently shift every event. Fail loudly.
-        _require_utc(spark)
-        return df.withColumn("ts", F.col("ts").cast(T.TimestampType())), True
-    return _read_cached(spark, sf_dir, name), False
-
-
-_SCAN_DF_LOCK = threading.Lock()
+    """Unmemoised scan body — see :func:`scan` for the semantics.
+    Returns (df, needs_utc): needs_utc marks the NTZ-events generation
+    whose cast resolves against the session tz at execution."""
+    st = footer_schema(spark, sf_dir, name)
+    df = spark.read.schema(st).parquet(path_of(sf_dir, name))
+    if name != "events":
+        return df, False
+    if isinstance(st["ts"].dataType, T.LongType):  # ns-as-long generation
+        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000"))), False
+    return df.withColumn("ts", F.col("ts").cast(T.TimestampType())), True
 
 
 def scan(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -228,47 +244,23 @@ def scan(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
       so every downstream consumer (windows, watermarks, oracles) sees
       ONE stable ts type regardless of the file generation.
 
-    The returned DataFrame is CACHED per (session, sf_dir, table,
-    content-stamp) — it is an immutable plan fragment, so serving the
-    same object to every consumer is exactly what a catalog's resolved
-    relation cache does, and it removes the dominant fixed cost of
-    query construction (~13-20 ms of py4j/analysis per scan × every
-    scan of every query; the r10 drain profile measured construction
-    as the concurrency floor of the whole workload). Correctness
-    guards: the cache dict rides ON the session object (dies with it
-    — no id()-reuse hazard across context restarts, and a stopped
-    session's fragments can never serve a live one), the key carries
-    the content stamp (an in-place testdata regen misses and
-    re-derives, superseded generations are evicted), and derivations
-    (.select/.filter/...) always create NEW DataFrames so sharing the
-    base object leaks nothing between queries."""
-    key = (sf_dir, name, content_stamp(path_of(sf_dir, name)))
-    with _SCAN_DF_LOCK:
-        cache = getattr(spark, "_cmdb_scan_df_cache", None)
-        if cache is None:
-            cache = {}
-            spark._cmdb_scan_df_cache = cache
-        hit = cache.get(key)
-    if hit is not None:
-        df, needs_utc = hit
-        if needs_utc:
-            # the NTZ→TimestampType cast resolves against the session tz
-            # at execution — a cache hit must fail as loudly under a
-            # hostile tz as the original build did
-            _require_utc(spark)
-        return df
-    df, needs_utc = _scan_build(spark, sf_dir, name)
-    with _SCAN_DF_LOCK:
-        # two threads can cold-miss the same key and both build
-        # (_scan_build runs unlocked by design — it does py4j I/O);
-        # the FIRST writer's fragment wins so the 'same stamp -> same
-        # OBJECT' identity contract holds even across the race
-        won = cache.get(key)
-        if won is not None:
-            return won[0]
-        for stale in [k for k in cache if k[:2] == key[:2] and k != key]:
-            del cache[stale]
-        cache[key] = (df, needs_utc)
+    The returned DataFrame is memoised in :func:`frames` — it is an
+    immutable plan fragment, so serving the same object to every
+    consumer is exactly what a catalog's resolved relation cache does,
+    and it removes the dominant fixed cost of query construction
+    (~13-20 ms of py4j/analysis per scan × every scan of every query;
+    the r10 drain profile measured construction as the concurrency
+    floor of the whole workload). Derivations (.select/.filter/...)
+    always create NEW DataFrames, so sharing the base object leaks
+    nothing between queries."""
+    df, needs_utc = memo(
+        frames(spark), sf_dir, name, lambda: _scan_build(spark, sf_dir, name)
+    )
+    if needs_utc:
+        # NTZ→TimestampType keeps the wall-clock ONLY in a UTC session;
+        # any other tz would silently shift every event. Fail loudly,
+        # on a memo hit as on the build.
+        _require_utc(spark)
     return df
 
 

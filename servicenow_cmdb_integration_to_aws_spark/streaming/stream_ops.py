@@ -29,12 +29,13 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from .. import scratch
 from ..operators.numeric import FIN, METRIC_BOUND
 from ..registry import EVENTS_US, query
-from ..sources.tables import path_of
+from ..sources.tables import ARTIFACTS, footer_schema, memo, path_of
 from ..statefile import exclusive, publish
 
 _COUNTER = itertools.count()
@@ -53,15 +54,6 @@ _EVENTS_MICROS_SCHEMA = (
     "value double, props string"
 )
 
-
-#: staged stream-source dirs, keyed by sf_dir → (content_stamp, dir).
-#: Keyed by sf_dir (NOT (sf_dir, stamp)) so an in-place testdata regen
-#: EVICTS the dead generation: on a stamp miss the superseded staged
-#: dir (a full parquet copy) is rmtree'd and restaged instead of
-#: leaking for the life of the driver (r10 ADVICE).
-_STAGED: dict[str, tuple[str, str]] = {}
-_TS_KIND: dict[str, tuple[str, str]] = {}
-_STAGED_DOCS: dict[str, tuple[str, str]] = {}
 
 #: readStream schema for the documents table (stable across testdata
 #: generations — no timestamp column)
@@ -82,8 +74,7 @@ def _stage_copy(src: str, dst_dir: str, name: str) -> None:
     stream whose partition column reads all-NULL while the batch
     oracle reconstructs it (r10 ADVICE medium). FileStreamSource does
     the same partition discovery as the batch reader when the loaded
-    directory is the base path, which ``_stage_dir``/``_stage_docs_dir``
-    guarantee."""
+    directory is the base path, which ``_stage_dir`` guarantees."""
     if os.path.isdir(src):
         parts = []
         for root, dirs, files in os.walk(src):
@@ -99,28 +90,6 @@ def _stage_copy(src: str, dst_dir: str, name: str) -> None:
             shutil.copy(fp, os.path.join(sub, f"{name}_{i:05d}.parquet"))
     else:
         shutil.copy(src, os.path.join(dst_dir, f"{name}.parquet"))
-
-
-def _staged_dir_for(
-    cache: dict, sf_dir: str, table: str, prefix: str
-) -> str:
-    """Stamp-checked staged-dir lookup: serve the cached dir while the
-    source content stamp matches; on a miss for the SAME sf_dir,
-    rmtree the superseded generation's staged copy before restaging
-    (one staged dir per sf_dir, ever — in-place testdata regens no
-    longer leak full parquet copies for the life of the driver)."""
-    from ..sources.tables import content_stamp
-
-    stamp = content_stamp(path_of(sf_dir, table))
-    hit = cache.get(sf_dir)
-    if hit is not None:
-        if hit[0] == stamp:
-            return hit[1]
-        shutil.rmtree(hit[1], ignore_errors=True)
-    d = tempfile.mkdtemp(prefix=prefix, dir=scratch.root())
-    _stage_copy(path_of(sf_dir, table), d, table)
-    cache[sf_dir] = (stamp, d)
-    return d
 
 
 def _stage_bucket_files(
@@ -159,36 +128,33 @@ def _stage_bucket_files(
         shutil.rmtree(tmp, ignore_errors=True)
 
 
-def _stage_docs_dir(sf_dir: str) -> str:
-    """Stage documents.parquet into a directory for FileStreamSource
-    (same pattern as _stage_dir for events)."""
-    return _staged_dir_for(_STAGED_DOCS, sf_dir, "documents", "stream_docs_")
+def _stage_dir(sf_dir: str, table: str = "events") -> str:
+    """FileStreamSource needs a *directory*: stage a copy of the table
+    into one under the scratch root, once per table generation (the
+    production layout is a directory of arriving files — this
+    recreates it). A regen in place removes the superseded copy."""
 
+    def build() -> str:
+        d = tempfile.mkdtemp(prefix=f"stream_{table}_", dir=scratch.root())
+        _stage_copy(path_of(sf_dir, table), d, table)
+        return d
 
-def _stage_dir(sf_dir: str) -> str:
-    """FileStreamSource needs a *directory*; stage the events parquet
-    into a tmp dir once per sf_dir (the production layout is a
-    directory of arriving files — this recreates it)."""
-    return _staged_dir_for(_STAGED, sf_dir, "events", "stream_src_")
+    return memo(
+        ARTIFACTS, sf_dir, table, build,
+        drop=lambda d: shutil.rmtree(d, ignore_errors=True),
+    )
 
 
 def _events_ts_kind(spark: SparkSession, sf_dir: str) -> str:
-    """Sniff the events parquet footer once per sf_dir: 'nanos' for the
-    TIMESTAMP(NANOS) generation (Spark 4 reads it only as raw long via
-    ``nanosAsLong``), 'micros' for TIMESTAMP(MICROS, NTZ). readStream
-    needs a user schema, so it cannot self-adapt the way batch scan()
-    does — branch here on the same footer evidence instead of assuming
-    a generation (the assumption is exactly what shipped 1970-era
-    timestamps when the testdata regenerated as MICROS)."""
-    from ..sources.tables import content_stamp
-
-    stamp = content_stamp(path_of(sf_dir, "events"))
-    hit = _TS_KIND.get(sf_dir)
-    if hit is None or hit[0] != stamp:
-        ts_type = dict(spark.read.parquet(path_of(sf_dir, "events")).dtypes)["ts"]
-        hit = (stamp, "nanos" if ts_type == "bigint" else "micros")
-        _TS_KIND[sf_dir] = hit
-    return hit[1]
+    """'nanos' for the TIMESTAMP(NANOS) generation (Spark 4 reads it
+    only as raw long via ``nanosAsLong``), 'micros' for
+    TIMESTAMP(MICROS, NTZ), read off the memoised footer schema.
+    readStream needs a user schema, so it cannot self-adapt the way
+    batch scan() does — branch here on the same footer evidence instead
+    of assuming a generation (the assumption is exactly what shipped
+    1970-era timestamps when the testdata regenerated as MICROS)."""
+    ts = footer_schema(spark, sf_dir, "events")["ts"].dataType
+    return "nanos" if isinstance(ts, T.LongType) else "micros"
 
 
 def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -792,7 +758,7 @@ def i14_stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw = (
         spark.readStream.schema(_DOCS_SCHEMA)
         .format("parquet")
-        .load(_stage_docs_dir(sf_dir))
+        .load(_stage_dir(sf_dir, "documents"))
     )
     gated = (
         raw.select(*quality_columns())
@@ -876,7 +842,7 @@ def i16_stream_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw = (
         spark.readStream.schema(_DOCS_SCHEMA)
         .format("parquet")
-        .load(_stage_docs_dir(sf_dir))
+        .load(_stage_dir(sf_dir, "documents"))
     )
     return _run_to_memory(raw.select(*redact_columns()))
 

@@ -1024,6 +1024,71 @@ def test_canon_cache_identity_and_regen_eviction(spark, tmp_path):
     )
 
 
+def test_a10_drift_copy_follows_inplace_regen(spark, tmp_path):
+    """a10's drifted copy of `supplier` is made once per table
+    generation: after supplier.parquet is rewritten in place, the next
+    run reads the new rows, not the first generation's copy."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    sf = str(tmp_path)
+    q = entrymod.queries()["a10_schema_evolve"]
+
+    def write(names):
+        n = len(names)
+        pq.write_table(
+            pa.table(
+                {
+                    "s_suppkey": pa.array(range(1, n + 1), pa.int64()),
+                    "s_name": pa.array(names, pa.string()),
+                    "s_nationkey": pa.array([0] * n, pa.int32()),
+                    "s_acctbal": pa.array([1.0] * n, pa.float64()),
+                }
+            ),
+            f"{sf}/supplier.parquet",
+        )
+
+    write(["gen1"])
+    assert [r.s_name for r in q(spark, sf).collect()] == ["gen1"]
+    write(["gen2a", "gen2b"])
+    assert sorted(r.s_name for r in q(spark, sf).collect()) == ["gen2a", "gen2b"]
+
+
+def test_sql_ids_leave_caller_views_alone(spark, sf_dir):
+    """The SQL-surface ids bind their inputs into the query text, so a
+    caller's own `orders` and `customer` views keep their rows and the
+    session gains no view."""
+    ids = [
+        "b13_exists", "b18_lateral_topk", "b19_scalar_subquery",
+        "d8_grouping_sets", "e6_range_frame", "f3_offset", "k5_udtf",
+        "k10_sql_udf", "p7_sql_passthrough", "p9_sql_recursive",
+        "p11_parameterized_sql",
+    ]
+    q = entrymod.queries()
+
+    def views():
+        return sorted(t.name for t in spark.catalog.listTables() if t.isTemporary)
+
+    spark.createDataFrame([(1, "mine")], "k int, v string").createOrReplaceTempView(
+        "orders"
+    )
+    spark.createDataFrame([(2, "theirs")], "k int, v string").createOrReplaceTempView(
+        "customer"
+    )
+    try:
+        before = views()
+        for qid in ids:
+            q[qid](spark, sf_dir).collect()
+        assert views() == before
+        assert [tuple(r) for r in spark.table("orders").collect()] == [(1, "mine")]
+        assert [tuple(r) for r in spark.table("customer").collect()] == [
+            (2, "theirs")
+        ]
+    finally:
+        spark.catalog.dropTempView("orders")
+        spark.catalog.dropTempView("customer")
+
+
 def test_fixpoint_reliable_checkpoint_identical_and_truncates(spark, tmp_path):
     """r11 verdict item 5: with FIXPOINT_CKPT_CONF set, every fixpoint
     round goes through reliable `checkpoint()` — output identical to

@@ -68,8 +68,15 @@ _TEMP_CALLS = {("tempfile", f) for f in ("mkdtemp", "mkstemp", "TemporaryDirecto
         # dir (a cache under scratch.root(), a sink's hidden temp) is
         # placed by its caller
         ("scratch.py", "atexit", _TEMP_CALLS, True),
+        # how a derived step is keyed to the table files it reads
+        (
+            "sources/tables.py",
+            None,
+            {(None, "content_stamp"), (None, "_cmdb_scan_df_cache")},
+            False,
+        ),
     ],
-    ids=["statefile", "scratch"],
+    ids=["statefile", "scratch", "memo"],
 )
 def test_state_file_jobs_live_in_statefile_only(home, module, names, dir_ok):
     """A recurring job has one home module: no other package module
@@ -77,7 +84,9 @@ def test_state_file_jobs_live_in_statefile_only(home, module, names, dir_ok):
     call passes `dir=`). statefile.py owns the lock (fcntl) and the
     durable publish (os.fsync, tempfile.mkstemp); scratch.py owns temp
     dirs (tempfile.mkdtemp, mkstemp, TemporaryDirectory) and the exit
-    cleanup (atexit)."""
+    cleanup (atexit); sources/tables.py owns the memo keys (the content
+    stamp and the session's fragment dict). A `None` module in `names`
+    matches the name on any module, and as a string constant."""
     import ast
     import pathlib
 
@@ -86,7 +95,7 @@ def test_state_file_jobs_live_in_statefile_only(home, module, names, dir_ok):
     root = pathlib.Path(pkg.__file__).parent
     offenders = []
     for path in sorted(root.rglob("*.py")):
-        if path.name == home and path.parent == root:
+        if path.relative_to(root).as_posix() == home:
             continue
         tree = ast.parse(path.read_text())
         placed = {
@@ -100,20 +109,71 @@ def test_state_file_jobs_live_in_statefile_only(home, module, names, dir_ok):
             if isinstance(node, ast.Import):
                 bad = any(a.name == module for a in node.names)
             elif isinstance(node, ast.ImportFrom):
-                bad = node.module == module or any(
-                    (node.module, a.name) in names for a in node.names
+                bad = (module is not None and node.module == module) or any(
+                    {(node.module, a.name), (None, a.name)} & names
+                    for a in node.names
                 )
             elif isinstance(node, ast.Attribute):
+                base = node.value.id if isinstance(node.value, ast.Name) else None
                 bad = (
-                    isinstance(node.value, ast.Name)
-                    and (node.value.id, node.attr) in names
+                    {(base, node.attr), (None, node.attr)} & names
                     and id(node) not in placed
                 )
+            elif isinstance(node, ast.Constant) and isinstance(node.value, str):
+                bad = (None, node.value) in names
             else:
                 continue
             if bad:
                 offenders.append(f"{path.relative_to(root)}:{node.lineno}")
     assert not offenders, offenders
+
+
+def test_memo_first_writer_wins_and_drops_the_rest(tmp_path):
+    """Threads that cold-miss one key together all get the first
+    writer's value, and every losing build goes to `drop` (two threads
+    staging one stream source used to leave an orphan copy). A regen in
+    place misses, and the superseded entry goes to `drop`. No Spark."""
+    import threading
+    import time
+
+    from servicenow_cmdb_integration_to_aws_spark.sources.tables import memo
+
+    sf = str(tmp_path)
+    (tmp_path / "t.parquet").write_bytes(b"gen1")
+    cache, built, dropped, got = {}, [], [], []
+    n = 4 * (os.cpu_count() or 1)
+    gate = threading.Barrier(n)
+
+    def build():
+        time.sleep(0.01)  # every client misses before the first insert
+        v = object()
+        built.append(v)
+        return v
+
+    def client():
+        gate.wait(60)
+        got.append(memo(cache, sf, "t", build, drop=dropped.append))
+
+    prev = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=client) for _ in range(n)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(60)
+    finally:
+        sys.setswitchinterval(prev)
+    assert not any(t.is_alive() for t in threads)
+    assert len(got) == n and all(v is got[0] for v in got)
+    assert len(built) > 1  # the race happened
+    assert sorted(map(id, dropped)) == sorted(id(v) for v in built if v is not got[0])
+    assert list(cache.values()) == [got[0]]
+
+    (tmp_path / "t.parquet").write_bytes(b"generation two")
+    fresh = memo(cache, sf, "t", object, drop=dropped.append)
+    assert fresh is not got[0] and dropped[-1] is got[0]
+    assert list(cache.values()) == [fresh]
 
 
 def test_scratch_root_is_lazy_and_removed_at_exit(tmp_path):

@@ -912,7 +912,7 @@ def test_stage_copy_preserves_hive_partition_values(spark, tmp_path):
     batch oracle reconstructed it."""
     from servicenow_cmdb_integration_to_aws_spark.streaming.stream_ops import (
         _DOCS_SCHEMA,
-        _stage_docs_dir,
+        _stage_dir,
     )
 
     sfd = tmp_path / "sf"
@@ -926,7 +926,7 @@ def test_stage_copy_preserves_hive_partition_values(spark, tmp_path):
         "lang"
     ).mode("overwrite").parquet(str(sfd / "documents.parquet"))
 
-    staged = _stage_docs_dir(str(sfd))
+    staged = _stage_dir(str(sfd), "documents")
     # the staged dir must still carry the lang=... structure
     assert any(d.startswith("lang=") for d in os.listdir(staged))
 
@@ -945,10 +945,10 @@ def test_staged_dir_evicted_on_inplace_regen(spark, tmp_path):
     generation's staged stream dir (rmtree + single cache entry per
     sf_dir), not leak a full parquet copy per regen for the life of
     the driver."""
+    from servicenow_cmdb_integration_to_aws_spark.sources.tables import ARTIFACTS
     from servicenow_cmdb_integration_to_aws_spark.streaming.stream_ops import (
         _DOCS_SCHEMA,
-        _STAGED_DOCS,
-        _stage_docs_dir,
+        _stage_dir,
     )
 
     sfd = tmp_path / "sf"
@@ -974,14 +974,16 @@ def test_staged_dir_evicted_on_inplace_regen(spark, tmp_path):
         )
 
     write_docs([(1, "generation one")])
-    d1 = _stage_docs_dir(str(sfd))
-    assert _stage_docs_dir(str(sfd)) == d1  # stamp hit: cached
+    d1 = _stage_dir(str(sfd), "documents")
+    assert _stage_dir(str(sfd), "documents") == d1  # stamp hit: cached
 
     write_docs([(1, "generation two, regenerated in place!")])
-    d2 = _stage_docs_dir(str(sfd))
+    d2 = _stage_dir(str(sfd), "documents")
     assert d2 != d1
     assert not os.path.exists(d1)  # superseded copy reclaimed
-    assert [k for k in _STAGED_DOCS if k == str(sfd)] == [str(sfd)]
+    assert [k[:2] for k in ARTIFACTS if k[0] == str(sfd)] == [
+        (str(sfd), "documents")
+    ]
 
 
 def test_stage_batch_dirs2_take_refuses_to_overwrite(spark, tmp_path):
@@ -1062,14 +1064,15 @@ def test_scope_frees_query_dirs_but_not_process_caches(spark, sf_dir, duck):
     from check_parity import rows_canon
 
     from servicenow_cmdb_integration_to_aws_spark import scratch
+    from servicenow_cmdb_integration_to_aws_spark.sources.tables import ARTIFACTS
     from servicenow_cmdb_integration_to_aws_spark.streaming.stream_ops import (
-        _STAGED,
         _stage_dir,
     )
 
     queries = entrymod.queries()
     before = set(os.listdir(scratch.root()))
-    _STAGED.pop(sf_dir, None)  # restage inside the block
+    for k in [k for k in ARTIFACTS if k[:2] == (sf_dir, "events")]:
+        ARTIFACTS.pop(k)  # restage inside the block
     with scratch.scope():
         for qid in ("a15_snapshot_compact", "a5_sink_partitioned"):
             assert queries[qid](spark, sf_dir).collect(), qid
