@@ -28,7 +28,7 @@ from .canon import canon_oracle, canon_vecs
 from .. import scratch
 from ..operators.fixpoint import _MAD
 from ..registry import query
-from ..sources.tables import scan
+from ..sources.tables import read_written, scan
 
 _D = lambda x: x.cast("double")  # noqa: E731
 
@@ -1137,7 +1137,7 @@ def j54_incremental_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the oracle's GROUP BY keeps as one group, but a plain full_outer
     # equi-join would never match base-NULL with delta-NULL (SQL
     # null ≠ null) and the merge would emit two split NULL rows.
-    base = spark.read.parquet(idx_dir).alias("b")
+    base = read_written(spark, idx_dir).alias("b")
     merged = (
         base.join(
             delta.alias("d"),

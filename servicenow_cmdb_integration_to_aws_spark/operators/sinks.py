@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .. import scratch
 from ..registry import query
-from ..sources.tables import SCHEMAS, scan
+from ..sources.tables import SCHEMAS, read_written, scan
 
 
 @query(
@@ -130,7 +130,7 @@ def a14_sink_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from pyspark.sql import functions as F
 
-    return spark.read.parquet(out).filter(
+    return read_written(spark, out).filter(
         (F.col("l_shipdate") >= "1997-03-01") & (F.col("l_shipdate") < "1997-06-01")
     )
 
@@ -169,7 +169,7 @@ def a19_small_file_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     frag = scratch.mkdtemp("sink_a19_frag_")
     o.repartition(64).write.mode("overwrite").parquet(frag)
     out = compact_parquet_dir(spark, frag)
-    return spark.read.parquet(out)
+    return read_written(spark, out)
 
 
 def compact_parquet_dir(
@@ -188,7 +188,7 @@ def compact_parquet_dir(
     n_target = max(1, math.ceil(n_bytes / target_bytes))
     out = scratch.mkdtemp("compacted_")
     (
-        spark.read.parquet(src)
+        read_written(spark, src)
         .coalesce(n_target)
         .write.mode("overwrite")
         .parquet(out)
@@ -256,7 +256,7 @@ def a22_zorder_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         .write.mode("overwrite")
         .parquet(out)
     )
-    return spark.read.parquet(out).filter(
+    return read_written(spark, out).filter(
         (F.col("l_partkey") >= 500)
         & (F.col("l_partkey") < 700)
         & (F.col("l_suppkey") >= 20)

@@ -236,14 +236,23 @@ def _pushdown_log_path(path: str) -> str:
 
 
 def last_pushed(path: str) -> str:
-    """The encoded query most recently pushed for `path` ('' if none)."""
+    """The encoded query most recently pushed for `path` ('' when the
+    last scan pushed nothing). Every reader writes the sidecar when it
+    is constructed, so a missing one means the worker wrote it under
+    another temp dir than the driver's: that raises, naming the dir
+    looked in, rather than reading as "nothing pushed"."""
     import os
 
     p = _pushdown_log_path(path)
-    if not os.path.exists(p):
-        return ""
-    with open(p) as f:
-        return f.read().strip()
+    try:
+        with open(p) as f:
+            return f.read().strip()
+    except FileNotFoundError:
+        raise FileNotFoundError(
+            f"no pushdown sidecar for {path} in {os.path.dirname(p)}: the "
+            "reader's worker wrote it under another temp dir, or no scan "
+            "of it has run"
+        ) from None
 
 
 @dataclass

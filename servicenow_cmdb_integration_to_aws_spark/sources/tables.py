@@ -14,6 +14,8 @@ same as over a single file.
 
 from __future__ import annotations
 
+import json
+import os
 import threading
 
 from pyspark.sql import DataFrame, SparkSession
@@ -140,19 +142,17 @@ def content_stamp(path: str) -> tuple:
     a regen changes size/mtime, so stamped keys miss and re-derive.
     One stat per part file — microseconds on any local layout, and a
     real catalog gets the same identity from its snapshot id."""
-    import os as _os
-
-    if _os.path.isdir(path):
+    if os.path.isdir(path):
         n, total, mt = 0, 0, 0
-        for root, dirs, files in _os.walk(path):
+        for root, dirs, files in os.walk(path):
             for f in files:
                 if f.endswith(".parquet"):
-                    st = _os.stat(_os.path.join(root, f))
+                    st = os.stat(os.path.join(root, f))
                     n += 1
                     total += st.st_size
                     mt = max(mt, st.st_mtime_ns)
         return (n, total, mt)
-    st = _os.stat(path)
+    st = os.stat(path)
     return (1, st.st_size, st.st_mtime_ns)
 
 
@@ -203,13 +203,81 @@ def frames(spark: SparkSession) -> dict:
     return spark.__dict__.setdefault("_cmdb_scan_df_cache", {})
 
 
+#: where Spark's parquet writer stores the row schema in each footer
+_SPARK_ROW_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _skipped(name: str) -> bool:
+    """Names Spark's file listing leaves out (hidden and ``_`` names,
+    but not ``_col=v`` partition dirs)."""
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
+def _root_files(path: str) -> list | None:
+    """The data files under one read root, or None where the footers
+    would not settle the schema the way inference does: a path the
+    driver cannot open, or a streaming sink whose log has no entry yet
+    (Spark reads none of the files then, and inference fails)."""
+    if os.path.isfile(path):
+        return [path]
+    if not os.path.isdir(path):
+        return None
+    log = os.path.join(path, "_spark_metadata")
+    if os.path.isdir(log) and all(_skipped(n) for n in os.listdir(log)):
+        return None
+    files = []
+    for root, dirs, names in os.walk(path):
+        dirs[:] = [d for d in dirs if not _skipped(d)]
+        files += [os.path.join(root, n) for n in names if not _skipped(n)]
+    return files
+
+
+def _written_schema(paths: tuple) -> T.StructType | None:
+    """The Spark row schema every data file under ``paths`` carries in
+    its footer, or None: a root with no data file, a file without the
+    key, two footers that disagree, or any error reading one."""
+    import pyarrow.parquet as pq
+
+    found = set()
+    try:
+        for p in paths:
+            files = _root_files(p)
+            if not files:
+                return None
+            for f in files:
+                found.add((pq.read_metadata(f).metadata or {}).get(_SPARK_ROW_KEY))
+    except Exception:
+        return None
+    if len(found) != 1 or None in found:
+        return None
+    return T.StructType.fromJson(json.loads(found.pop()))
+
+
+def read_written(spark: SparkSession, *paths: str) -> DataFrame:
+    """Read parquet the engine wrote itself, with the schema Spark's
+    writer stored in the footers, so no schema-inference job runs.
+
+    The footers are read on the driver with pyarrow (no Spark job), and
+    they are the ones inference would open; partition columns still
+    come from the directory names and nullability from the read, so the
+    schema is inference's. Where the footers cannot give it (see
+    :func:`_written_schema`) this is a plain inferring
+    ``spark.read.parquet`` — the package's only one. Nothing is
+    memoised: the inputs are fresh dirs on every call."""
+    st = _written_schema(paths)
+    if st is None:
+        return spark.read.parquet(*paths)
+    return spark.read.schema(st).parquet(*paths)
+
+
 def footer_schema(spark: SparkSession, sf_dir: str, name: str) -> T.StructType:
-    """The table's footer-inferred schema. Inference launches 1-2
-    driver jobs per ``spark.read.parquet``, a driver sync a catalog
-    would never do; memoised, only the first construction per table
-    generation pays it (a1 schema-on-file: drift is still caught)."""
+    """The table's footer schema, as :func:`read_written` gives it. For
+    the pyarrow-written testdata that is inference, 1-2 driver jobs
+    per ``spark.read.parquet``, a driver sync a catalog would never
+    do; memoised, only the first construction per table generation
+    pays it (a1 schema-on-file: drift is still caught)."""
     return memo(
-        _INFERRED, sf_dir, name, lambda: spark.read.parquet(path_of(sf_dir, name)).schema
+        _INFERRED, sf_dir, name, lambda: read_written(spark, path_of(sf_dir, name)).schema
     )
 
 
@@ -330,7 +398,7 @@ def scan_evolving(spark: SparkSession, path: str, st: T.StructType) -> DataFrame
     resolved by cast to the declared type. Column *order* is the
     declared order. This stays a plain projection over the footer-schema
     scan, so pushdown/pruning still reach the parquet reader."""
-    df = spark.read.parquet(path)
+    df = read_written(spark, path)
     cols = []
     for f in st.fields:
         if f.name in df.columns:

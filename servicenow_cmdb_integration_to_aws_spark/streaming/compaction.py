@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 from .. import scratch
 from ..operators.numeric import FIN
 from ..registry import EVENTS_US, query
-from ..sources.tables import scan
+from ..sources.tables import read_written, scan
 from ..statefile import exclusive, publish, read_json, sweep
 
 
@@ -143,8 +143,8 @@ def _contiguous_tail(
 
 
 def _read_batches(spark: SparkSession, log_dir: str, ids: list) -> DataFrame:
-    return spark.read.parquet(
-        *[os.path.join(log_dir, f"batch_id={b}") for b in ids]
+    return read_written(
+        spark, *[os.path.join(log_dir, f"batch_id={b}") for b in ids]
     )
 
 
@@ -339,7 +339,7 @@ class SnapshotStore:
             return v
 
     def _read_version(self, spark: SparkSession, v: int) -> DataFrame:
-        return spark.read.parquet(os.path.join(self.root, f"v={v}"))
+        return read_written(spark, os.path.join(self.root, f"v={v}"))
 
     def gc(self, keep_last: int = 1) -> list[int]:
         """Version retention sweep: delete committed version dirs older

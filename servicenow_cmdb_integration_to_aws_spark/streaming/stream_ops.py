@@ -35,7 +35,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from .. import scratch
 from ..operators.numeric import FIN, METRIC_BOUND
 from ..registry import EVENTS_US, query
-from ..sources.tables import ARTIFACTS, footer_schema, memo, path_of
+from ..sources.tables import ARTIFACTS, footer_schema, memo, path_of, read_written
 from ..statefile import exclusive, publish
 
 _COUNTER = itertools.count()
@@ -631,7 +631,7 @@ def i11_foreach_batch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql import Window
 
-    log = spark.read.parquet(log_dir)
+    log = read_written(spark, log_dir)
     # total order incl. payload tiebreaks: duplicate event_ids with
     # different payloads must resolve by content, not physical row
     # order (r13 --rowshuffle finding; e8's rule)
@@ -918,7 +918,7 @@ def i17_stream_file_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_type") == "purchase"
     ).select("event_id", "user_id", "ts", "value")
     _drain(spark, s.writeStream.format("parquet").option("path", out))
-    return spark.read.parquet(out)
+    return read_written(spark, out)
 
 
 def _sink_log_entry_paths(fp: str) -> list:
@@ -1464,7 +1464,7 @@ def compact_stream_sink(
         # step 2: rewrite + publish
         tmpd = tempfile.mkdtemp(dir=out, prefix=".compact_tmp_")
         (
-            spark.read.parquet(*files)
+            read_written(spark, *files)
             .coalesce(n_target)
             .write.mode("overwrite")
             .parquet(tmpd)
@@ -1556,4 +1556,4 @@ def i20_stream_sink_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     compact_stream_sink(spark, out)
-    return spark.read.parquet(out)
+    return read_written(spark, out)

@@ -312,9 +312,14 @@ def test_no_eager_jobs_during_plan_construction(spark, sf_dir):
     launch ZERO Spark jobs. An eager .count() mid-construction runs the
     upstream pipeline a whole extra time and sync-barriers the driver —
     the scalar belongs in the plan as a 1-row agg crossJoin(broadcast).
-    Gate the three formerly-offending ids explicitly."""
+    Gate the formerly-offending ids explicitly."""
     sc = spark.sparkContext
-    for qid in ("j8_tfidf", "t8_pipeline_curate", "j20_mixture_sample"):
+    for qid in (
+        "j8_tfidf",
+        "t8_pipeline_curate",
+        "j20_mixture_sample",
+        "a10_schema_evolve",
+    ):
         _q(spark, sf_dir, qid)  # warm one-time scan metadata inference
         before = sc._jsc.sc().dagScheduler().nextJobId()
         _q(spark, sf_dir, qid)  # construct only — no action

@@ -148,6 +148,24 @@ def test_sidecar_reset_on_new_scan(spark, sf_dir):
     assert rest_source.last_pushed(path_of(sf_dir, "customer")) == ""
 
 
+def test_last_pushed_raises_when_worker_wrote_elsewhere(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """The worker writes the sidecar under its own temp dir. With only
+    the driver's `tempfile.tempdir` moved, the driver finds no sidecar:
+    that must raise and name the dir it looked in, not read as a scan
+    that pushed nothing."""
+    import re
+    import tempfile
+
+    import pytest
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    _read(spark, sf_dir).filter(F.col("c_acctbal") > 9000.0).count()
+    with pytest.raises(FileNotFoundError, match=re.escape(str(tmp_path))):
+        rest_source.last_pushed(path_of(sf_dir, "customer"))
+
+
 def test_python_sink_two_phase_commit(spark, sf_dir):
     """a20: after the write, staging must be EMPTY (all files renamed
     on commit, none leaked), the manifest totals must match the input

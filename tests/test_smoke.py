@@ -75,8 +75,11 @@ _TEMP_CALLS = {("tempfile", f) for f in ("mkdtemp", "mkstemp", "TemporaryDirecto
             {(None, "content_stamp"), (None, "_cmdb_scan_df_cache")},
             False,
         ),
+        # schema inference: every other read of parquet names a schema
+        # or goes through read_written
+        ("sources/tables.py", None, {("read", "parquet")}, False),
     ],
-    ids=["statefile", "scratch", "memo"],
+    ids=["statefile", "scratch", "memo", "inference"],
 )
 def test_state_file_jobs_live_in_statefile_only(home, module, names, dir_ok):
     """A recurring job has one home module: no other package module
@@ -85,8 +88,11 @@ def test_state_file_jobs_live_in_statefile_only(home, module, names, dir_ok):
     durable publish (os.fsync, tempfile.mkstemp); scratch.py owns temp
     dirs (tempfile.mkdtemp, mkstemp, TemporaryDirectory) and the exit
     cleanup (atexit); sources/tables.py owns the memo keys (the content
-    stamp and the session's fragment dict). A `None` module in `names`
-    matches the name on any module, and as a string constant."""
+    stamp and the session's fragment dict) and schema inference (a
+    `<x>.read.parquet` with no `.schema(...)` between). A `None` module
+    in `names` matches the name on any module, and as a string
+    constant; a module name also matches the attribute the name hangs
+    off (`read` in `spark.read.parquet`)."""
     import ast
     import pathlib
 
@@ -114,7 +120,12 @@ def test_state_file_jobs_live_in_statefile_only(home, module, names, dir_ok):
                     for a in node.names
                 )
             elif isinstance(node, ast.Attribute):
-                base = node.value.id if isinstance(node.value, ast.Name) else None
+                if isinstance(node.value, ast.Name):
+                    base = node.value.id
+                elif isinstance(node.value, ast.Attribute):  # spark.read.parquet
+                    base = node.value.attr
+                else:
+                    base = None
                 bad = (
                     {(base, node.attr), (None, node.attr)} & names
                     and id(node) not in placed

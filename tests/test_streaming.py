@@ -1009,6 +1009,75 @@ def test_stage_batch_dirs2_take_refuses_to_overwrite(spark, tmp_path):
         done()
 
 
+def test_read_written_schema_is_inferences(spark, sf_dir, tmp_path):
+    """sources/tables.read_written gives the schema `spark.read.parquet`
+    infers on every layout the engine reads back (partition column,
+    nullability and field order included), and where the footers
+    settle it the read launches no Spark job. Pyarrow-written testdata
+    (no Spark key in the footer) and two roots whose footers disagree
+    fall back to inference."""
+    import glob
+
+    from servicenow_cmdb_integration_to_aws_spark.sources.tables import (
+        _written_schema,
+        path_of,
+        read_written,
+        scan,
+    )
+    from servicenow_cmdb_integration_to_aws_spark.streaming.compaction import (
+        SnapshotStore,
+        _stage_batch_dirs,
+    )
+    from servicenow_cmdb_integration_to_aws_spark.streaming.stream_ops import (
+        _drain,
+        _stream_events,
+    )
+
+    cols = ["event_id", "user_id", "ts", "event_type", "value"]
+    log = str(tmp_path / "log")
+    take, done = _stage_batch_dirs(
+        scan(spark, sf_dir, "events").select(*cols), a=F.col("event_id") % 2
+    )
+    try:
+        for b in (0, 1):
+            take("a", b, os.path.join(log, f"batch_id={b}"))
+    finally:
+        done()
+    store = SnapshotStore(str(tmp_path / "snap"), key="user_id", order=["ts", "event_id"])
+    assert store.compact(spark, log) == 1
+    sink = str(tmp_path / "sink")
+    _drain(
+        spark,
+        _stream_events(spark, sf_dir).select(*cols).writeStream.format("parquet")
+        .option("path", sink),
+    )
+    assert os.path.isdir(os.path.join(sink, "_spark_metadata"))
+    wide, narrow = str(tmp_path / "wide"), str(tmp_path / "narrow")
+    spark.range(3).write.parquet(wide)
+    spark.range(3).selectExpr("cast(id as int) id").write.parquet(narrow)
+
+    cases = {
+        "batch dir": ([os.path.join(log, "batch_id=0")], True),
+        "version dir": ([str(tmp_path / "snap" / "v=1")], True),
+        "partitioned log": ([log], True),
+        "stream sink": ([sink], True),
+        "file list": (sorted(glob.glob(os.path.join(sink, "part-*.parquet"))), True),
+        "pyarrow testdata": ([path_of(sf_dir, "events")], False),
+        "footers disagree": ([wide, narrow], False),
+    }
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    for case, (paths, by_footer) in cases.items():
+        assert paths, case
+        assert (_written_schema(tuple(paths)) is not None) == by_footer, case
+        before = dag.nextJobId()
+        got = read_written(spark, *paths).schema
+        jobs = dag.nextJobId() - before
+        assert got == spark.read.parquet(*paths).schema, case
+        if by_footer:
+            assert jobs == 0, (case, jobs)
+    assert read_written(spark, log).columns[-1] == "batch_id"
+
+
 def test_drain_pins_state_partitions_only_across_start(
     spark, tmp_path, monkeypatch
 ):
