@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import importlib
 import json
+import pkgutil
 from collections.abc import Iterable
 from pathlib import Path
 
@@ -36,41 +37,15 @@ _LOADED = False
 
 
 def load_all():
-    """Import every operator module (idempotent); returns the registry."""
+    """Import every module of the query subpackages (idempotent), then
+    order the registry by ``driver_order.json``; returns the registry."""
     global _LOADED
     if not _LOADED:
-        for mod in (
-            "operators.golden2",
-            "llm.retrieval",
-            "operators.graph",
-            "operators.extended",
-            "operators.transform_map",
-            "operators.evolution",
-            "operators.windows",
-            "functions.scalar",
-            "llm.dedup",
-            "llm.vectors",
-            "llm.text",
-            "llm.pipeline",
-            "operators.analytics",
-            "llm.multimodal",
-            "streaming.batch_equiv",
-            "streaming.stream_ops",
-            "streaming.compaction",
-            "operators.udf_surface",
-            "plans.encoded_query",
-            "operators.golden",
-            "sources.rest_source",
-            "sources.python_source",
-            "operators.sinks",
-            "operators.scans",
-            "operators.aggregates",
-            "operators.filters",
-            "operators.setops",
-            "operators.sorts",
-            "operators.joins",
-        ):
-            importlib.import_module(f"{__name__}.{mod}")
+        for sub in ("operators", "llm", "plans", "streaming", "functions", "sources"):
+            pkg = importlib.import_module(f"{__name__}.{sub}")
+            found = pkgutil.iter_modules(pkg.__path__, f"{pkg.__name__}.")
+            for name in sorted(m.name for m in found):
+                importlib.import_module(name)
         order = driver_order(registry.QUERIES, DRIVER_ORDER_JSON)
         for d in (registry.QUERIES, registry.ORACLE):
             snap = {k: d[k] for k in order if k in d}

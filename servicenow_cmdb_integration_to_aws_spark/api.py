@@ -104,8 +104,8 @@ class CmdbEngine:
     def near_dup_pairs(self, docs: DataFrame) -> DataFrame:
         """MinHash/LSH near-duplicate (doc_a, doc_b, jaccard) pairs
         over a (doc_id, text) frame — the SAME strategy dispatch as
-        the registered j2 query (masked / wide-mask / exact token-join
-        / banded, exactness gated by distinct-set count): the facade
+        the registered j2 query (bitmask pairs / exact token-join /
+        banded, exactness gated by distinct-set count): the facade
         can never diverge from the oracle-checked machinery."""
         from pyspark.sql import functions as F
 

@@ -11,9 +11,12 @@ near-duplicate detection, built entirely from native Spark expressions
 - the O(n²) pair space is never materialized in the LSH regime: bands
   hash-partition candidates so only same-bucket pairs join (SURVEY §4:
   "avoids O(n²) by construction");
-- candidate generation is cost-based, like Spark's own join selection:
-  all-pairs popcount when g is small (g²/2 codegen'd comparisons, no
-  shuffle), LSH banding when g is large;
+- candidate generation is cost-based, like Spark's own join selection
+  (:func:`lsh_pairs` picks one of three strategies): all-pairs
+  popcount over bitmasks of max(1, ⌈v/62⌉) words when the vocabulary
+  v ≤ 992 and g is small (g²/2 codegen'd comparisons, no shuffle), the
+  oracle's token self-join for a larger vocabulary over few docs, LSH
+  banding otherwise;
 - signatures are one narrow row per set (32 longs), shuffled once;
 - exact-Jaccard verification runs only on candidate pairs;
 - banding parameters (k=32, b=16, r=2) give P[candidate] ≈ 1 - (1-J²)^16
@@ -28,6 +31,9 @@ near-duplicate detection, built entirely from native Spark expressions
 
 from __future__ import annotations
 
+import operator
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -40,15 +46,14 @@ N_HASHES = 32
 N_BANDS = 16
 ROWS_PER_BAND = N_HASHES // N_BANDS
 TAU = 0.8
-#: token sets over an ≤62-symbol vocabulary pack into one BIGINT mask
-MASK_MAX_VOCAB = 62
-#: bits used per mask word in the wide (multi-BIGINT) regime — kept
-#: below 64 so no shift ever touches the sign bit's neighborhood
+#: bits used per BIGINT mask word — kept below 64 so no shift ever
+#: touches the sign bit's neighborhood
 MASK_WORD_BITS = 62
-#: the wide-mask EXACT path covers vocabularies up to this many
-#: symbols (16 BIGINT words). Beyond it (or above BRUTE_MAX_GROUPS
-#: docs) the banded general path takes over — which is approximate
-#: on adversarially dup-dense corpora (see _lsh_pairs_general).
+#: the EXACT mask path covers vocabularies up to this many symbols
+#: (16 BIGINT words). Above BRUTE_MAX_GROUPS distinct sets within it,
+#: or beyond it above BRUTE_MAX_GROUPS docs, the banded general path
+#: takes over — which is approximate on adversarially dup-dense
+#: corpora (see _lsh_pairs_general).
 WIDE_MAX_VOCAB = MASK_WORD_BITS * 16
 #: below this many DISTINCT token sets, all-pairs popcount beats LSH
 #: banding (g²/2 codegen'd comparisons vs band-explode + dedup shuffle)
@@ -100,218 +105,16 @@ def _tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _vocab_row(tok: DataFrame) -> DataFrame:
     """1-row ``(vocab: array<string>)`` — the sorted corpus vocabulary.
 
-    Only called under the masked-path premise (vocabulary fits
-    MASK_MAX_VOCAB symbols, guarded by a bounded probe before entry),
-    so every partition's ``collect_set`` partial state holds ≤62
-    entries: a safe map-side-combined single pass. ``sort_array``
-    makes the rank dictionary deterministic. Replaces the previous
-    distinct → row_number window → dim broadcast-join pipeline (three
-    exchanges and a single-partition window) with one 1-row aggregate
-    — cold-plan stage count is the measured cost driver here."""
+    Called by the mask path (:func:`_mask_pairs`) only, whose premise
+    is a vocabulary of at most WIDE_MAX_VOCAB symbols (checked by a
+    bounded probe before entry), so every partition's ``collect_set``
+    partial state stays small: a safe map-side-combined single pass.
+    ``sort_array`` makes the rank dictionary deterministic. Replaces
+    the previous distinct → row_number window → dim broadcast-join
+    pipeline (three exchanges and a single-partition window) with one
+    1-row aggregate — cold-plan stage count is the measured cost driver
+    here."""
     return tok.select(F.sort_array(F.collect_set("tok")).alias("vocab"))
-
-
-def _doc_masks(tok: DataFrame, vocab_row: DataFrame) -> DataFrame:
-    """(doc_id, mask, n) — token set as a packed 64-bit bitmask.
-
-    The bit position is ``array_position`` into the broadcast sorted
-    vocabulary array (1-row crossJoin-broadcast, the house pattern) and
-    the per-doc OR-fold is a partial-aggregatable bit_or — whole-stage
-    codegen end to end, no window, no dim join. Only valid when the
-    vocabulary fits MASK_MAX_VOCAB symbols."""
-    return (
-        tok.crossJoin(F.broadcast(vocab_row))
-        .groupBy("doc_id")
-        .agg(
-            F.bit_or(
-                F.expr(
-                    "CAST(1 AS BIGINT)"
-                    " << CAST(array_position(vocab, tok) - 1 AS INT)"
-                )
-            ).alias("mask"),
-            F.count(F.lit(1)).alias("n"),
-        )
-    )
-
-
-def _lsh_pairs_masked(tok: DataFrame, n_docs_hint: int) -> DataFrame:
-    """MinHash+LSH near-dup pairs over a mask-packable vocabulary.
-
-    Scale insight (dedupe-identical-content-first): a MinHash signature
-    is a pure function of the token *set*, so docs with identical sets
-    collapse to one group BEFORE signatures are computed. The whole LSH
-    pipeline (signatures -> bands -> candidate join -> exact verify)
-    then runs over g distinct sets, not n docs — on duplicate-heavy
-    corpora g << n and the quadratic candidate join shrinks by (n/g)^2.
-    Doc-level pairs are expanded only at the end, so total work is
-    O(g*LSH + |output|): output-optimal.
-
-    With the small vocabulary a token set is one BIGINT mask and exact
-    Jaccard is popcount(a&b)/(na+nb-popcount) — whole-stage codegen
-    end-to-end, no Python; in the brute regime the (<=320 KB) group
-    dims broadcast so the verify stream never shuffles, while the
-    LSH regime (large g by premise) leaves the dim-join strategy to
-    AQE instead of force-broadcasting a g-row table."""
-    # masks feeds the expansion twice and groups; groups feeds candidate
-    # generation, both verify dims and self_pairs. Without persistence
-    # the doc scan + mask build re-executes per consumer — at 100 TB
-    # that is that many passes over the corpus, so large inputs persist
-    # both narrow intermediates (<=24 B/row, MEMORY_AND_DISK spills
-    # instead of OOMing; the ContextCleaner drops blocks once the plan
-    # is unreferenced). Small inputs skip the persist: the
-    # materialization barrier costs more than the recompute it saves
-    # (the mask build is now a map-only pass over the scan).
-    vocab_row = _vocab_row(tok)
-    masks = _doc_masks(tok, vocab_row)
-    groups = masks.select("mask", "n").distinct()
-
-    # Cost-based candidate generation (the LSH analogue of Spark picking
-    # broadcast-NL vs sort-merge): below BRUTE_MAX_GROUPS distinct sets,
-    # evaluating all g²/2 group pairs with a codegen'd popcount is
-    # cheaper than exploding 16 bands per group and deduplicating the
-    # collision multiset — especially on dup-dense corpora where LSH
-    # prunes little, AND it is exact where banding's bucket cap is not.
-    # The feasibility measure is g (distinct sets), NOT the corpus row
-    # count: a dup-dense web corpus keeps g small while n grows without
-    # bound, and collapsing first makes exactness a function of g
-    # alone. n_docs <= threshold proves g <= threshold for free
-    # (parquet metadata count); above it, one BOUNDED probe
-    # (limit(g+1).count() over the persisted groups — never counts past
-    # the threshold) decides. Only corpora with genuinely many DISTINCT
-    # mutually-similar sets take the banded branch, where the
-    # degenerate-bucket cap's approximate contract is documented —
-    # that regime is exactly where exact pair enumeration (any
-    # engine's) stops being computable.
-    brute = n_docs_hint <= BRUTE_MAX_GROUPS
-    if not brute:
-        # the probe is also the multi-consumer persist point: masks
-        # feeds groups + both expansion dims, groups feeds the probe +
-        # candidate generation + both verify dims + self_pairs
-        masks = masks.persist(_MAD)
-        groups = groups.persist(_MAD)
-        brute = (
-            groups.select("mask").limit(BRUTE_MAX_GROUPS + 1).count()
-            <= BRUTE_MAX_GROUPS
-        )
-    inter = F.bit_count(F.col("mask_a").bitwiseAND(F.col("mask_b")))
-    jac = inter.cast("double") / (F.col("na") + F.col("nb") - inter)
-    ga = groups.select(F.col("mask").alias("mask_a"), F.col("n").alias("na"))
-    gb = groups.select(F.col("mask").alias("mask_b"), F.col("n").alias("nb"))
-    if brute:
-        # Fused all-pairs verify: the exact-Jaccard test rides IN the
-        # broadcast-NL join predicate (g <= BRUTE_MAX_GROUPS by the
-        # branch test → a <=320 KB build side), so no g²/2 candidate
-        # set ever materializes and no post-join dim lookups run —
-        # one codegen'd stage emits the surviving pairs directly.
-        # The stream side MUST be explicitly spread first: g rows are
-        # only ~16 B each, so AQE's size-based coalescing collapses
-        # the distinct's output to ONE partition — and then the g²/2
-        # predicate evaluations plus the (potentially huge on
-        # dup-dense corpora) qualifying-pair output run on one core
-        # (measured: a 4x probe cliffed 3.3 s → 172 s exactly at this
-        # boundary). Bytes are the wrong cost model for an NL join;
-        # an explicit round-robin repartition (AQE never re-coalesces
-        # user-specified repartitions) slices the quadratic COMPUTE
-        # evenly across the cluster for the price of shuffling ≤20k
-        # tiny rows.
-        par = tok.sparkSession.sparkContext.defaultParallelism
-        cross = (
-            ga.repartition(par)
-            .join(
-                F.broadcast(gb),
-                (F.col("mask_a") < F.col("mask_b")) & (jac >= TAU),
-            )
-            .select("mask_a", "mask_b", jac.alias("jaccard"))
-        )
-    else:
-        # re-materialize each group's token set from its mask bits
-        # (the tok_id dictionary is a posexplode of the 1-row sorted
-        # vocab array — no window) and MinHash the groups, not the
-        # docs.
-        vid = vocab_row.select(F.posexplode("vocab").alias("tok_id", "tok"))
-        gtok = groups.join(
-            F.broadcast(vid), F.expr("(mask >> tok_id) & 1 = 1")
-        ).select("mask", "tok")
-        sigs = gtok.groupBy("mask").agg(
-            *[
-                F.min(F.xxhash64(F.concat(F.lit(f"{i}|"), F.col("tok")))).alias(
-                    f"h{i}"
-                )
-                for i in range(N_HASHES)
-            ]
-        )
-        band_hashes = [
-            F.xxhash64(
-                F.concat_ws(
-                    ",",
-                    *[
-                        F.col(f"h{b * ROWS_PER_BAND + r}").cast("string")
-                        for r in range(ROWS_PER_BAND)
-                    ],
-                )
-            )
-            for b in range(N_BANDS)
-        ]
-        bands = _cap_buckets(
-            sigs.select(
-                "mask",
-                F.posexplode(F.array(*band_hashes)).alias("band_idx", "band_hash"),
-            ),
-            ["band_idx", "band_hash"],
-        )
-        # candidate group pairs from shared LSH buckets; identical-set
-        # pairs (J=1 >= tau) are added by self_pairs below either way.
-        cand = (
-            bands.alias("L")
-            .join(
-                bands.alias("R"),
-                (F.col("L.band_idx") == F.col("R.band_idx"))
-                & (F.col("L.band_hash") == F.col("R.band_hash"))
-                & (F.col("L.mask") < F.col("R.mask")),
-            )
-            .select(F.col("L.mask").alias("mask_a"), F.col("R.mask").alias("mask_b"))
-            .distinct()
-        )
-        # The LSH branch exists BECAUSE g is large — force-broadcasting
-        # a g-row dim here is the exact scale assumption the branch was
-        # built to avoid; leave the dim-join strategy to Catalyst/AQE,
-        # which still picks broadcast whenever the runtime size permits
-        # and degrades to a mask-keyed shuffle join when not.
-        cross = (
-            cand.join(ga, "mask_a")
-            .join(gb, "mask_b")
-            .select("mask_a", "mask_b", jac.alias("jaccard"))
-            .filter(F.col("jaccard") >= TAU)
-        )
-    self_pairs = groups.select(
-        F.col("mask").alias("mask_a"),
-        F.col("mask").alias("mask_b"),
-        F.lit(1.0).alias("jaccard"),
-    )
-
-    # expand group pairs back to doc pairs (output-bound joins). Cross
-    # pairs orient each doc pair by least/greatest (groups are disjoint,
-    # so each unordered pair appears exactly once); within-group pairs
-    # keep da < db to emit each unordered pair once.
-    da = masks.select(F.col("mask").alias("mask_a"), F.col("doc_id").alias("da"))
-    db = masks.select(F.col("mask").alias("mask_b"), F.col("doc_id").alias("db"))
-    if n_docs_hint <= BRUTE_MAX_GROUPS:
-        # the doc dims are masks = n_docs rows — broadcastable only
-        # when the DOC count is small, NOT merely when g is (the
-        # g-probed brute regime can hold with billions of docs over
-        # few distinct sets; there AQE picks the dim-join strategy).
-        da, db = F.broadcast(da), F.broadcast(db)
-    return (
-        cross.unionByName(self_pairs)
-        .join(da, "mask_a")
-        .join(db, "mask_b")
-        .filter((F.col("mask_a") != F.col("mask_b")) | (F.col("da") < F.col("db")))
-        .select(
-            F.least("da", "db").alias("doc_a"),
-            F.greatest("da", "db").alias("doc_b"),
-            "jaccard",
-        )
-    )
 
 
 @query(
@@ -370,18 +173,18 @@ def j2_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate pairs → exact-Jaccard verification at τ=0.8.
 
     The oracle is the *brute-force* O(n²) pair set — equality holds in
-    the masked and wide-mask regimes (exact popcount Jaccard over every
-    surviving pair) and, in the banded general regime, because banding
-    recall at J≥τ is ≈1-8e-8 with (b=16, r=2) and every candidate is
-    verified exactly — EXCEPT on adversarially dup-dense big-vocab
-    corpora where the degenerate-bucket cap prunes true pairs (measured:
-    a 4x dup-dense probe corpus kept 1.37M of ~11.9M true pairs). That
-    is exactly why the exact regimes exist: any corpus where pair
-    enumeration is the right query gets an exact path — the masked
-    path decides by g (DISTINCT sets, probed boundedly: dup-dense
-    corpora stay exact at ANY row count), the wide and token-join
-    paths by doc count. Hash family: xxhash64 over a seed-prefixed
-    token (fixed seeds → fully deterministic)."""
+    the mask regime (exact popcount Jaccard over every group pair) and
+    the token-join regime, and, in the banded general regime, because
+    banding recall at J≥τ is ≈1-8e-8 with (b=16, r=2) and every
+    candidate is verified exactly — EXCEPT on adversarially dup-dense
+    corpora where the degenerate-bucket cap prunes true pairs
+    (measured: a 4x dup-dense probe corpus kept 1.37M of ~11.9M true
+    pairs). That is exactly why the exact regimes exist: any corpus
+    where pair enumeration is the right query gets an exact path — the
+    mask path decides by g (DISTINCT sets, probed boundedly: dup-dense
+    corpora stay exact at ANY row count), the token-join path by doc
+    count. Hash family: xxhash64 over a seed-prefixed token (fixed
+    seeds → fully deterministic)."""
     tok = _tokens(spark, sf_dir)
     # n_docs = |canon_docs| = |distinct doc_id| by construction (canon
     # keeps exactly one winner per id), so the dispatch count is a
@@ -402,47 +205,53 @@ def lsh_pairs(tok: DataFrame, n_docs: int) -> DataFrame:
     (distinct().limit(993).count() — never scans past 993 distinct
     tokens) plus the caller-supplied doc count:
 
-    - v ≤ 62                 → single-BIGINT masked path (collapse
-      identical sets; brute if g ≤ 20k — probed boundedly — else
-      set-level banded LSH);
-    - v ≤ 992                → wide-mask path (⌈v/62⌉ BIGINT words,
-      codegen popcount Jaccard; same g gate, banded fallback);
+    - v ≤ 992                → mask path (max(1, ⌈v/62⌉) BIGINT words,
+      collapse identical sets, all-pairs popcount Jaccard if g ≤ 20k —
+      probed boundedly — else the banded general path);
     - docs ≤ 20k             → exact token-join (the oracle's own
       co-keyed plan over distinct sets);
-    - else                   → doc-level banded LSH (the 100 TB
+    - else                   → set-level banded LSH (the 100 TB
       regime: approximate only on corpora dense enough that pair
       enumeration is itself the wrong query — see j16/j36)."""
     v = tok.select("tok").distinct().limit(WIDE_MAX_VOCAB + 1).count()
-    if v <= MASK_MAX_VOCAB:
-        return _lsh_pairs_masked(tok, n_docs)
     if v <= WIDE_MAX_VOCAB:
-        n_words = -(-v // MASK_WORD_BITS)  # ceil
-        return _wide_brute_pairs(tok, n_words, n_docs)
+        # max: the empty corpus (v = 0) still gets one word
+        return _mask_pairs(tok, max(1, -(-v // MASK_WORD_BITS)), n_docs)
     if n_docs <= BRUTE_MAX_GROUPS:
         return _exact_pairs_token_join(tok)
     return _lsh_pairs_general(tok)
 
 
-def _wide_brute_pairs(
-    tok: DataFrame, n_words: int, n_docs_hint: int
-) -> DataFrame:
-    """Exact near-dup pairs over a mid-size vocabulary: token sets pack
-    into ``n_words`` BIGINT mask words and every group pair is verified
-    with codegen'd popcount Jaccard — no banding, no caps, no recall
-    loss. Exactness feasibility is decided by g (distinct sets), same
-    rule as the masked path: n ≤ BRUTE_MAX_GROUPS proves g for free,
-    otherwise one bounded probe over the persisted groups decides; a
-    genuinely-many-distinct-sets corpus falls back to the banded
-    general path (its approximate contract documented there). In the
-    brute regime the build side stays ≤20k × (8·W+8) B and the g²/2
-    predicate evaluations are bounded; the same dup-dense corpus that
-    defeats banded candidate generation (thousands of DISTINCT sets
-    all mutually near-dup) is exactly where this regime wins. Same
-    collapse-identical-sets-first design as _lsh_pairs_masked; the
-    single-long masked path is this with W=1 plus an LSH branch."""
+def _mask_pairs(tok: DataFrame, n_words: int, n_docs_hint: int) -> DataFrame:
+    """Exact near-dup pairs over a vocabulary of at most WIDE_MAX_VOCAB
+    symbols: each token set packs into ``n_words`` BIGINT mask words
+    (bit = rank in the broadcast sorted vocabulary, OR-folded by a
+    partial-aggregatable bit_or), and every group pair is verified with
+    codegen'd popcount Jaccard — no banding, no caps, no recall loss,
+    no Python.
+
+    Scale insight (dedupe-identical-content-first): a token set's
+    Jaccard with any other set is a pure function of the set, so docs
+    with identical sets collapse to one group (one mask) BEFORE any
+    pair work; the quadratic stage runs over g distinct sets, not n
+    docs — on duplicate-heavy corpora g << n and it shrinks by (n/g)².
+    Doc-level pairs are expanded only at the end: output-optimal.
+
+    Exactness feasibility is decided by g, not the row count (a
+    dup-dense web corpus keeps g small while n grows without bound):
+    n ≤ BRUTE_MAX_GROUPS proves g ≤ BRUTE_MAX_GROUPS for free; above it
+    one BOUNDED probe (limit(g+1).count() over the persisted groups)
+    decides, and a genuinely-many-distinct-sets corpus falls back to
+    the banded general path (its approximate contract documented
+    there). In the exact regime the build side stays ≤20k × (8·W+8) B;
+    the dup-dense corpus that defeats banded candidate generation is
+    exactly where this regime wins.
+
+    Pair order and the self-pair filter compare the mask words as
+    longs — a lexicographic chain and an OR of word inequalities, never
+    struct comparisons — so at W=1 every comparison and both expansion
+    joins are on one long key."""
     mcols = [f"m{w}" for w in range(n_words)]
-    a_of = lambda c: f"{c}_a"  # noqa: E731
-    b_of = lambda c: f"{c}_b"  # noqa: E731
     vocab_row = _vocab_row(tok)
     pos = "(array_position(vocab, tok) - 1)"
     masks = (
@@ -465,6 +274,13 @@ def _wide_brute_pairs(
     )
     groups = masks.select(*mcols, "n").distinct()
     if n_docs_hint > BRUTE_MAX_GROUPS:
+        # masks feeds groups and both expansion dims; groups feeds the
+        # probe, the NL join's two sides and self_pairs. Without a
+        # persist each consumer re-runs the corpus scan and mask build —
+        # at 100 TB that many passes — so large inputs persist both
+        # narrow intermediates (MEMORY_AND_DISK spills instead of
+        # OOMing). Small inputs skip it: the materialization barrier
+        # costs more than the map-only recompute it saves.
         masks = masks.persist(_MAD)
         groups = groups.persist(_MAD)
         g_small = (
@@ -482,42 +298,50 @@ def _wide_brute_pairs(
             masks.unpersist(blocking=False)
             groups.unpersist(blocking=False)
             return _lsh_pairs_general(tok)
-    ga = groups.select(
-        *[F.col(c).alias(a_of(c)) for c in mcols], F.col("n").alias("na")
+    a_names = [f"{c}_a" for c in mcols]
+    b_names = [f"{c}_b" for c in mcols]
+    as_a = [F.col(c).alias(n) for c, n in zip(mcols, a_names)]
+    as_b = [F.col(c).alias(n) for c, n in zip(mcols, b_names)]
+    a_cols = [F.col(n) for n in a_names]
+    b_cols = [F.col(n) for n in b_names]
+    ga = groups.select(*as_a, F.col("n").alias("na"))
+    gb = groups.select(*as_b, F.col("n").alias("nb"))
+    inter = reduce(
+        operator.add,
+        [F.bit_count(a.bitwiseAND(b)) for a, b in zip(a_cols, b_cols)],
     )
-    gb = groups.select(
-        *[F.col(c).alias(b_of(c)) for c in mcols], F.col("n").alias("nb")
-    )
-    inter = None
-    for c in mcols:
-        term = F.bit_count(F.col(a_of(c)).bitwiseAND(F.col(b_of(c))))
-        inter = term if inter is None else inter + term
     jac = inter.cast("double") / (F.col("na") + F.col("nb") - inter)
-    sa = F.struct(*[F.col(a_of(c)) for c in mcols])
-    sb = F.struct(*[F.col(b_of(c)) for c in mcols])
-    # explicit spread of the stream side: same AQE bytes-vs-compute
-    # blind spot as the single-long brute branch (see _lsh_pairs_masked)
+    # a < b word by word: m0_a < m0_b OR (m0_a = m0_b AND (m1_a < m1_b OR …))
+    a_lt_b = None
+    for a, b in reversed(list(zip(a_cols, b_cols))):
+        a_lt_b = a < b if a_lt_b is None else (a < b) | ((a == b) & a_lt_b)
+    a_ne_b = reduce(operator.or_, [a != b for a, b in zip(a_cols, b_cols)])
+    # Fused all-pairs verify: the exact-Jaccard test rides IN the
+    # broadcast-NL join predicate, so no g²/2 candidate set ever
+    # materializes — one codegen'd stage emits the surviving pairs.
+    # The stream side MUST be explicitly spread first: g rows are only
+    # 8·W+8 B each, so AQE's size-based coalescing collapses the
+    # distinct's output to ONE partition — and then the g²/2 predicate
+    # evaluations plus the (potentially huge on dup-dense corpora)
+    # qualifying-pair output run on one core (measured: a 4x probe
+    # cliffed 3.3 s → 172 s exactly at this boundary). Bytes are the
+    # wrong cost model for an NL join; an explicit round-robin
+    # repartition (AQE never re-coalesces user-specified repartitions)
+    # slices the quadratic COMPUTE evenly across the cluster for the
+    # price of shuffling ≤20k tiny rows.
     par = tok.sparkSession.sparkContext.defaultParallelism
     cross = (
         ga.repartition(par)
-        .join(F.broadcast(gb), (sa < sb) & (jac >= TAU))
-        .select(
-            *[F.col(a_of(c)) for c in mcols],
-            *[F.col(b_of(c)) for c in mcols],
-            jac.alias("jaccard"),
-        )
+        .join(F.broadcast(gb), a_lt_b & (jac >= TAU))
+        .select(*a_cols, *b_cols, jac.alias("jaccard"))
     )
-    self_pairs = groups.select(
-        *[F.col(c).alias(a_of(c)) for c in mcols],
-        *[F.col(c).alias(b_of(c)) for c in mcols],
-        F.lit(1.0).alias("jaccard"),
-    )
-    da = masks.select(
-        *[F.col(c).alias(a_of(c)) for c in mcols], F.col("doc_id").alias("da")
-    )
-    db = masks.select(
-        *[F.col(c).alias(b_of(c)) for c in mcols], F.col("doc_id").alias("db")
-    )
+    self_pairs = groups.select(*as_a, *as_b, F.lit(1.0).alias("jaccard"))
+    # expand group pairs back to doc pairs (output-bound joins). Cross
+    # pairs orient each doc pair by least/greatest (groups are disjoint,
+    # so each unordered pair appears exactly once); within-group pairs
+    # keep da < db to emit each unordered pair once.
+    da = masks.select(*as_a, F.col("doc_id").alias("da"))
+    db = masks.select(*as_b, F.col("doc_id").alias("db"))
     if n_docs_hint <= BRUTE_MAX_GROUPS:
         # the doc dims are n_docs rows — broadcastable only when the
         # DOC count is small, not merely g (the g-probed regime can
@@ -525,9 +349,9 @@ def _wide_brute_pairs(
         da, db = F.broadcast(da), F.broadcast(db)
     return (
         cross.unionByName(self_pairs)
-        .join(da, [a_of(c) for c in mcols])
-        .join(db, [b_of(c) for c in mcols])
-        .filter((sa != sb) | (F.col("da") < F.col("db")))
+        .join(da, a_names)
+        .join(db, b_names)
+        .filter(a_ne_b | (F.col("da") < F.col("db")))
         .select(
             F.least("da", "db").alias("doc_a"),
             F.greatest("da", "db").alias("doc_b"),
@@ -539,14 +363,14 @@ def _wide_brute_pairs(
 def _lsh_pairs_general(tok: DataFrame) -> DataFrame:
     # General path (vocab too large for masks, or corpus too large for
     # brute verification): SAME collapse-identical-sets-first design as
-    # the masked path, with an md5 set-digest standing in for the
+    # the mask path, with an md5 set-digest standing in for the
     # bitmask as the group key. CONTRACT NOTE: this is the approximate
     # 100 TB regime — on corpora where thousands of DISTINCT sets are
     # all mutually near-dup, the degenerate-bucket cap prunes true
     # cross-set pairs (measured 88% loss on a dup-dense probe corpus).
-    # The dispatch in j2_minhash_lsh guarantees any corpus small enough
-    # for exact pair enumeration takes the masked/wide exact paths
-    # instead; reaching here with a dup-dense corpus means pair
+    # The dispatch in lsh_pairs guarantees any corpus small enough
+    # for exact pair enumeration takes the mask or token-join exact
+    # paths instead; reaching here with a dup-dense corpus means pair
     # enumeration is the wrong query (use j16/j36 cluster forms).
     # Collapsing before banding matters twice here: (a) dup-heavy
     # corpora shrink the quadratic stages by (n/g)²; (b) a clone
@@ -701,7 +525,7 @@ def _exact_pairs_token_join(tok: DataFrame) -> DataFrame:
     ≥1 token — a superset of every J ≥ τ > 0 pair, so nothing is ever
     dropped (no banding, no bucket caps, no recall argument needed).
     Cost is Σ_token gdf(token)² over distinct sets, bounded by the
-    same g ≤ BRUTE_MAX_GROUPS gate as the wide-mask regime and equal
+    same g ≤ BRUTE_MAX_GROUPS gate as the mask regime and equal
     to the work the comparison oracle itself performs; corpora beyond
     that take the banded scale path. Shuffles carry 16-byte digests
     and tokens, never document text."""

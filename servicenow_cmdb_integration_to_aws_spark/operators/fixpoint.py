@@ -24,8 +24,10 @@ and every fixpoint round in the engine checkpoints there instead
 truncation on the reliable path). Unset ⇒ local, the measured-optimal
 single-cluster default.
 
-This module deliberately imports no operator modules (import order is
-the registration order; see ``load_all``).
+This module holds no ``@query`` and imports no operator module;
+``load_all`` imports it with the rest of ``operators/``, and the order
+``queries()`` lists ids in comes from ``driver_order.json``, not from
+import order.
 """
 
 from __future__ import annotations

@@ -3,9 +3,9 @@
 Money columns carry exactly-2-decimal values, so sums/products are
 computed over DECIMAL casts — exact, order-independent — and only the
 final value is cast to DOUBLE, identically in Spark and the DuckDB
-oracle. Lives in its own module so importing it does NOT trigger any
-operator registration (registration order is the driver's check order;
-see ``load_all``).
+oracle. Lives in its own module so importing it registers no query;
+the order ``queries()`` lists ids in comes from ``driver_order.json``,
+not from import order (see ``load_all``).
 """
 
 from __future__ import annotations

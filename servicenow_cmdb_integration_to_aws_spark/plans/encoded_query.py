@@ -38,6 +38,7 @@ from __future__ import annotations
 import datetime
 import re
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -208,21 +209,24 @@ def _text_search_column(df: DataFrame, term_value: str) -> Column:
     return pred
 
 
-def compile_encoded(df: DataFrame, encoded: str) -> DataFrame:
-    """Compile + apply an encoded query against a DataFrame. ``^NQ``
-    branches union by name (SURVEY §3.2 → g1 semantics); the
-    `123TEXTQUERY321` pseudo-field compiles to a case-insensitive
-    any-string-column search (the platform's global text query)."""
-    branches = parse(encoded)
+def _compile(base: DataFrame, encoded: str, walk=None) -> DataFrame:
+    """The one body of both compilers: each ``^NQ`` branch ANDs its
+    OR-groups into one filter over ``base`` (a `123TEXTQUERY321` term
+    searches ``base``'s string columns), applies its ORDERBY
+    directives, and the branches union by name. A group holding a
+    dotted field goes to ``walk(out, group) -> out`` instead; without
+    ``walk`` a dotted field is read as a plain column name."""
     outs = []
-    for cq in branches:
-        out = df
-        pred = None
+    for cq in parse(encoded):
+        out, pred = base, None
         for group in cq.groups:
+            if walk is not None and any("." in t.field for t in group):
+                out = walk(out, group)
+                continue
             gcol = None
             for term in group:
                 if term.field == TEXT_QUERY_FIELD:
-                    tcol = _text_search_column(df, term.value)
+                    tcol = _text_search_column(base, term.value)
                 else:
                     tcol = _term_to_column(term)
                 gcol = tcol if gcol is None else (gcol | tcol)
@@ -234,10 +238,15 @@ def compile_encoded(df: DataFrame, encoded: str) -> DataFrame:
                 *[F.col(c).desc() if d else F.col(c).asc() for c, d in cq.order_by]
             )
         outs.append(out)
-    result = outs[0]
-    for o in outs[1:]:
-        result = result.unionByName(o)
-    return result
+    return reduce(DataFrame.unionByName, outs)
+
+
+def compile_encoded(df: DataFrame, encoded: str) -> DataFrame:
+    """Compile + apply an encoded query against a DataFrame. ``^NQ``
+    branches union by name (SURVEY §3.2 → g1 semantics); the
+    `123TEXTQUERY321` pseudo-field compiles to a case-insensitive
+    any-string-column search (the platform's global text query)."""
+    return _compile(df, encoded)
 
 
 @query(
@@ -348,56 +357,32 @@ def compile_encoded_dotwalk(
     imposes on list queries vs GlideRecord joins [SN-API])."""
     from ..sources.tables import scan as _scan
 
-    base = _scan(spark, sf_dir, table)
-    outs = []
-    for cq in parse(encoded):
-        out = base
-        pred = None
-        for group in cq.groups:
-            walked = [t for t in group if "." in t.field]
-            if walked and len(group) > 1:
-                raise ValueError(
-                    "dot-walk terms must be top-level AND terms, not ^OR "
-                    f"alternatives: {[t.field for t in group]}"
-                )
-            if not walked:
-                gcol = None
-                for term in group:
-                    tcol = _term_to_column(term)
-                    gcol = tcol if gcol is None else (gcol | tcol)
-                pred = gcol if pred is None else (pred & gcol)
-                continue
-            term = walked[0]
-            steps, leaf_table, leaf_field = _walk_steps(table, term.field)
-            if not steps:
-                raise ValueError(f"dot-walk field has no '.': {term.field}")
-            keys = _scan(spark, sf_dir, leaf_table).filter(
-                _term_to_column(Term(leaf_field, term.op, term.value))
+    def walk(out: DataFrame, group: list[Term]) -> DataFrame:
+        if len(group) > 1:
+            raise ValueError(
+                "dot-walk terms must be top-level AND terms, not ^OR "
+                f"alternatives: {[t.field for t in group]}"
             )
-            # fold the surviving keys back down the chain, deepest first
-            for src_table, ref_field, dst_key in reversed(steps[1:]):
-                keys = _scan(spark, sf_dir, src_table).join(
-                    F.broadcast(keys.select(dst_key).distinct()),
-                    F.col(ref_field) == F.col(dst_key),
-                    "left_semi",
-                )
-            _, ref_field, dst_key = steps[0]
-            out = out.join(
+        (term,) = group
+        steps, leaf_table, leaf_field = _walk_steps(table, term.field)
+        keys = _scan(spark, sf_dir, leaf_table).filter(
+            _term_to_column(Term(leaf_field, term.op, term.value))
+        )
+        # fold the surviving keys back down the chain, deepest first
+        for src_table, ref_field, dst_key in reversed(steps[1:]):
+            keys = _scan(spark, sf_dir, src_table).join(
                 F.broadcast(keys.select(dst_key).distinct()),
                 F.col(ref_field) == F.col(dst_key),
                 "left_semi",
             )
-        if pred is not None:
-            out = out.filter(pred)
-        if cq.order_by:
-            out = out.orderBy(
-                *[F.col(c).desc() if d else F.col(c).asc() for c, d in cq.order_by]
-            )
-        outs.append(out)
-    result = outs[0]
-    for o in outs[1:]:
-        result = result.unionByName(o)
-    return result
+        _, ref_field, dst_key = steps[0]
+        return out.join(
+            F.broadcast(keys.select(dst_key).distinct()),
+            F.col(ref_field) == F.col(dst_key),
+            "left_semi",
+        )
+
+    return _compile(_scan(spark, sf_dir, table), encoded, walk)
 
 
 @query(

@@ -347,11 +347,10 @@ class SnowTableDataSource(DataSource):
 
 
 def register(spark) -> None:
-    """Idempotent registration of the connector on a session."""
-    try:
-        spark.dataSource.register(SnowTableDataSource)
-    except Exception:
-        pass  # already registered on this session
+    """Register the connector on a session. ``spark.dataSource.register``
+    is idempotent (python_source's ``register`` relies on the same), so
+    any failure is real and raises here, not later at the read."""
+    spark.dataSource.register(SnowTableDataSource)
 
 
 # --- registered query id -------------------------------------------------

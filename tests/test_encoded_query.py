@@ -200,3 +200,24 @@ def test_text_query_pseudo_field(spark, sf_dir):
     assert got == want > 0
     # no string column matches → empty, not an error
     assert compile_encoded(o.select("o_orderkey"), "123TEXTQUERY321=x").count() == 0
+
+
+def test_engine_encoded_query_text_search(spark, sf_dir):
+    """CmdbEngine.encoded_query (the dot-walk compiler) reads the
+    123TEXTQUERY321 pseudo-field as a text search, as compile_encoded
+    does, and composes it with a dot-walk term."""
+    from servicenow_cmdb_integration_to_aws_spark import CmdbEngine
+    from servicenow_cmdb_integration_to_aws_spark.plans.encoded_query import (
+        compile_encoded_dotwalk,
+    )
+    from servicenow_cmdb_integration_to_aws_spark.sources.tables import scan
+
+    encoded = "123TEXTQUERY321=URGENT^o_totalprice>250000"
+    got = CmdbEngine(spark, sf_dir).encoded_query("orders", encoded)
+    want = compile_encoded(scan(spark, sf_dir, "orders"), encoded)
+    assert got.columns == want.columns
+    assert sorted(got.collect()) == sorted(want.collect()) and want.count() > 0
+    walked = compile_encoded_dotwalk(
+        spark, sf_dir, "orders", f"{encoded}^o_custkey.c_nationkey.n_name=NATION_7"
+    ).count()
+    assert 0 < walked < want.count()

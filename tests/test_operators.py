@@ -57,10 +57,10 @@ def test_minhash_lsh_recall_on_fixture(spark):
 
 
 def test_minhash_lsh_paths_agree(spark, monkeypatch):
-    """j2 has four physical strategies (mask+all-pairs — single- or
-    multi-word, exact token-join, mask+LSH banding, doc-level banded
-    LSH for at-scale corpora). All must produce the identical pair set
-    on the same corpus."""
+    """j2 has three physical strategies (mask+all-pairs over
+    max(1, ⌈v/62⌉) words, exact token-join, set-level banded LSH for
+    at-scale corpora). All must produce the identical pair set on the
+    same corpus."""
     import os
     import tempfile
 
@@ -86,7 +86,7 @@ def test_minhash_lsh_paths_agree(spark, monkeypatch):
             for r in QUERIES["j2_minhash_lsh"](spark, d).collect()
         )
 
-    wide = run()  # vocab=70 > MASK_MAX_VOCAB, ≤ WIDE_MAX_VOCAB → 2-word masks
+    wide = run()  # vocab=70 > MASK_WORD_BITS, ≤ WIDE_MAX_VOCAB → 2-word masks
     assert [(a, b) for a, b, _ in wide] == [(1, 2), (1, 3), (2, 3)]
     # wide g-probe: 3 distinct sets over 4 docs — with the threshold
     # between g and n the bounded probe keeps the exact wide branch...
@@ -97,7 +97,7 @@ def test_minhash_lsh_paths_agree(spark, monkeypatch):
     assert run() == wide
     monkeypatch.setattr(dedup, "BRUTE_MAX_GROUPS", 20_000)
     # force the exact token-join path (big vocab, within oracle reach)
-    monkeypatch.setattr(dedup, "WIDE_MAX_VOCAB", dedup.MASK_MAX_VOCAB)
+    monkeypatch.setattr(dedup, "WIDE_MAX_VOCAB", dedup.MASK_WORD_BITS)
     exact = run()
     assert exact == wide
     # force the doc-level banded general path on the same corpus
@@ -130,7 +130,7 @@ def test_minhash_lsh_paths_agree(spark, monkeypatch):
     g_probed = run2()
     assert g_probed == brute
     monkeypatch.setattr(dedup, "BRUTE_MAX_GROUPS", 0)
-    banded = run2()  # force mask + LSH banding (g=3 > 0)
+    banded = run2()  # force the banded general path (g=3 > 0)
     assert brute == banded
 
 
@@ -569,7 +569,7 @@ def test_lsh_general_path_matches_bruteforce(spark):
         _lsh_pairs_general,
     )
 
-    vocab = [f"w{i:03d}" for i in range(100)]  # > MASK_MAX_VOCAB
+    vocab = [f"w{i:03d}" for i in range(100)]  # > MASK_WORD_BITS
     docs = {}
     base = vocab[:20]
     for i in range(30):  # clone cluster: identical token sets

@@ -166,6 +166,21 @@ def test_last_pushed_raises_when_worker_wrote_elsewhere(
         rest_source.last_pushed(path_of(sf_dir, "customer"))
 
 
+def test_register_failure_raises(spark, monkeypatch):
+    """A failed connector registration raises at the call, like
+    python_source's register, and is not swallowed until a later read
+    fails with a less specific error."""
+    import pytest
+    from pyspark.sql.datasource import DataSourceRegistration
+
+    def boom(self, cls):
+        raise RuntimeError(f"cannot register {cls.name()}")
+
+    monkeypatch.setattr(DataSourceRegistration, "register", boom)
+    with pytest.raises(RuntimeError, match="cannot register snow_table"):
+        rest_source.register(spark)
+
+
 def test_python_sink_two_phase_commit(spark, sf_dir):
     """a20: after the write, staging must be EMPTY (all files renamed
     on commit, none leaked), the manifest totals must match the input
